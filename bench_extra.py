@@ -164,7 +164,23 @@ def cmd_stages():
     print(json.dumps(res))
 
 
+# subcommand -> (min, max) number of arguments after it
+_ARITY = {"time": (1, 2), "stages": (0, 0), "plan": (2, 2), "all": (0, 1)}
+
+
+def _check_usage(argv: list[str]) -> None:
+    """Print the usage docstring and exit 2 on a missing or unknown
+    subcommand or a wrong argument count — before any Spark work."""
+    if argv and argv[0] in _ARITY:
+        lo, hi = _ARITY[argv[0]]
+        if lo <= len(argv) - 1 <= hi:
+            return
+    sys.stderr.write(__doc__)
+    raise SystemExit(2)
+
+
 if __name__ == "__main__":
+    _check_usage(sys.argv[1:])
     cmd = sys.argv[1]
     if cmd == "time":
         reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3

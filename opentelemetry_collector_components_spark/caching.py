@@ -1,17 +1,21 @@
 """Scoped lifetime for operator-internal cache intermediates.
 
-Several operators persist intermediates whose reuse spans multiple plan
-branches (minhash signatures, candidate-restricted shingles, pack_sequences
-inputs).  Spark keys cache entries by canonical plan — repeat calls on the
-SAME input reuse one entry — but each *distinct* input adds an entry that
-lives until session end: evictable under memory pressure, yet
-pressure-inducing in long-lived drivers that loop over many inputs
-(ADVICE r3).  ``scoped_intermediates`` bounds that lifetime:
+The one rule: an operator that caches an intermediate which outlives a
+single action does so only through ``maybe_persist`` (or registers the
+handle with ``track_handle``), and callers consume the operator's result
+inside ``scoped_intermediates()``:
 
     with scoped_intermediates() as handles:
         pairs = minhash_lsh_pairs(docs, ...)
         pairs.write.parquet(out)     # consume INSIDE the block
     # every intermediate persisted by the operators above is now unpersisted
+
+Spark keys cache entries by canonical plan, so repeat calls on the SAME
+input reuse one entry, but each distinct input adds an entry that lives
+until it is unpersisted.  There are no per-operator persist switches: a
+caller that wants no cache left behind opens a scope.  Persists that are
+released inside the function that made them (per-round iteration state,
+streaming micro-batches) are outside this rule.
 
 Materialize results before the block exits — after exit the intermediates
 are gone and any unconsumed lazy plan will recompute from scratch.
@@ -26,11 +30,9 @@ from pyspark.sql import DataFrame
 _ACTIVE_TRACKERS: list[list[DataFrame]] = []
 
 
-def maybe_persist(df: DataFrame, enabled: bool) -> DataFrame:
-    """Persist ``df`` when ``enabled``, registering the handle with every
-    active ``scoped_intermediates`` block so exit can unpersist it."""
-    if not enabled:
-        return df
+def maybe_persist(df: DataFrame) -> DataFrame:
+    """Persist ``df``, registering the handle with every active
+    ``scoped_intermediates`` block so exit can unpersist it."""
     df = df.persist()
     for tracker in _ACTIVE_TRACKERS:
         tracker.append(df)

@@ -133,24 +133,21 @@ def interval_rollup_union(
     keys: list[str],
     time_col: str = "warc_ts",
     intervals: tuple[str, ...] = ("1m", "10m", "60m"),
-    persist_base: bool = True,
     distinct_mode: str | None = None,
 ) -> DataFrame:
     """All intervals in ONE DataFrame, discriminated by
     ``metricset_interval``, with the raw scan evaluated exactly once.
 
-    The 1m base is persisted (and materialized) before the coarser branches
-    reference it: the base is tiny — #groups = |keys| x minutes — while the
-    input is the full table, so caching the base (never the input!) is the
-    scale-correct way to avoid one full pass per interval.  This is the same
+    Every branch reads the same 1m base aggregate, and the branches are one
+    union plan, so Spark's exchange reuse runs the base's shuffle once and
+    the coarser branches read it as a ``ReusedExchange``: the input is
+    scanned once and nothing is cached.  The coarser intervals roll up the
+    tiny base (#groups = |keys| x minutes), never the input — the same
     asymmetry the reference exploits by keeping only merged per-interval
     state in pebble rather than raw datapoints (processor.go:391-425).
     """
     ivls = sorted(intervals, key=lambda i: _IVL_SECONDS[i])
     base = aggregate_base_interval(df, keys, time_col, ivls[0], distinct_mode=distinct_mode)
-    if persist_base:
-        base = base.persist()
-        base.count()  # materialize once so union branches share it
     frames = [decorate_interval(base, ivls[0])]
     for ivl in ivls[1:]:
         frames.append(decorate_interval(rollup_interval(base, keys, ivl), ivl))

@@ -49,7 +49,6 @@ def funnel_stages(
         df.where(F.col(type_col) == stages[0])
         .groupBy(user_col)
         .agg(F.min(ts_col).alias("_t")),
-        True,
     )
     counts = [anchors.count()]
     for stage in stages[1:]:
@@ -59,7 +58,6 @@ def funnel_stages(
             .where(F.col(ts_col) > F.col("_t"))
             .groupBy(user_col)
             .agg(F.min(ts_col).alias("_t")),
-            True,
         )
         counts.append(anchors.count())
     return df.sparkSession.createDataFrame(

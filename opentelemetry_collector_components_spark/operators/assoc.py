@@ -67,7 +67,6 @@ def pair_associations(
             sizes.where(F.col("_k") <= max_basket_size).select("basket"),
             "basket",
         ),
-        True,
     )
     n_baskets = kept.select("basket").distinct().count()
     items = kept.groupBy("item").agg(F.count(F.lit(1)).alias("n_i"))

@@ -54,7 +54,7 @@ def label_propagation(
 
     if rounds < 0:
         raise ValueError("rounds must be >= 0")
-    e = maybe_persist(_symmetrize(edges, src_col, dst_col), True)
+    e = maybe_persist(_symmetrize(edges, src_col, dst_col))
     labels = e.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )

@@ -73,9 +73,7 @@ def split_conformal(
     # (its contract says persist upstream), and the coverage aggregate
     # scans once more — without this the md5 split and whatever join
     # produced pred_col re-execute ~rounds+3 times
-    scored = maybe_persist(
-        df.select(resid.alias("resid"), is_calib.alias("is_calib")), True
-    )
+    scored = maybe_persist(df.select(resid.alias("resid"), is_calib.alias("is_calib")))
     calib = scored.where("is_calib")
     both = scored.agg(
         F.sum(F.col("is_calib").cast("long")).alias("nc"),

@@ -60,20 +60,17 @@ def dbscan_from_pairs(
     # (r6: was ~3x the pair-stage cost per run)
     edges = maybe_persist(
         pairs.select(F.col("id_a").alias("s"), F.col("id_b").alias("d")),
-        True,
     )
     und = maybe_persist(
         edges.unionByName(
             edges.select(F.col("d").alias("s"), F.col("s").alias("d"))
         ),
-        True,
     )
     deg = und.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     core = maybe_persist(
         deg.where(F.col("deg") >= min_pts - 1).select(
             F.col("s").alias("id")
         ),
-        True,
     )
     core_edges = (
         edges.join(core.withColumnRenamed("id", "s"), "s")
@@ -88,7 +85,6 @@ def dbscan_from_pairs(
         core.join(comp, "id", "left").select(
             "id", F.coalesce("cluster", F.col("id")).alias("cluster")
         ),
-        True,
     )
     border = (
         und.join(core_clusters.withColumnRenamed("id", "d"), "d")

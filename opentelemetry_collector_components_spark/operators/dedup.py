@@ -295,7 +295,6 @@ def _fuzzy_small_side_hits(
     threshold: float,
     engine: str,
     broadcast_small: bool,
-    persist_intermediates: bool,
     banded_small: DataFrame | None = None,
     ex_small: DataFrame | None = None,
     sig_large: DataFrame | None = None,
@@ -311,10 +310,9 @@ def _fuzzy_small_side_hits(
     restricted to candidate ids; the small side broadcasts when
     ``broadcast_small`` (bands and shingles both) — never a corpus
     self-join, never corpus x small all-pairs."""
-    from ..caching import maybe_persist as _mp
+    from ..caching import maybe_persist
 
     rows_per_band = _check_lsh_params(n_hashes, bands)
-    maybe_persist = lambda d: _mp(d, persist_intermediates)
     bcast = F.broadcast if broadcast_small else (lambda d: d)
     if sig_large is None:
         sig_large = minhash_signatures(df, id_col, text_col, n_hashes, k, engine)
@@ -356,7 +354,6 @@ def contaminated_ids_fuzzy(
     k: int = 3,
     threshold: float = 0.2,
     engine: str = "xxhash",
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """NEAR-duplicate benchmark decontamination: corpus documents whose
     MinHash bands collide with a benchmark document and whose exact
@@ -371,7 +368,7 @@ def contaminated_ids_fuzzy(
     return _fuzzy_small_side_hits(
         df, bench_df, "corpus_id", "bench_id", id_col, text_col,
         n_hashes, bands, k, threshold, engine,
-        broadcast_small=True, persist_intermediates=persist_intermediates,
+        broadcast_small=True,
     )
 
 
@@ -422,7 +419,6 @@ def minhash_lsh_pairs(
     k: int = 3,
     threshold: float = 0.2,
     engine: str = "xxhash",
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """MinHash LSH candidate generation + exact Jaccard verification.
 
@@ -430,21 +426,10 @@ def minhash_lsh_pairs(
     signature slice matches exactly (bucket join, linear candidate cost).
     Candidates are then verified with the exact shingle join restricted to
     candidate ids, so output == ngram_jaccard_pairs restricted to recall of
-    the LSH (sound, possibly incomplete — the standard trade).
-
-    ``persist_intermediates``: cache the signature table and the
-    candidate-restricted shingles, each of which otherwise re-runs the
-    full-corpus shingle explode per consuming plan branch (2x and 3x).
-    Cache entries are keyed by canonical plan (repeat calls on the same
-    input reuse, not accumulate) and the unified memory manager can evict
-    them, but they live until session end — long-lived drivers looping
-    over many distinct inputs should consume inside
-    ``caching.scoped_intermediates()`` (unpersists on exit) or pass
-    False and manage ``persist()``/``unpersist()`` themselves."""
-    from ..caching import maybe_persist as _mp
+    the LSH (sound, possibly incomplete — the standard trade)."""
+    from ..caching import maybe_persist
 
     rows_per_band = _check_lsh_params(n_hashes, bands)
-    maybe_persist = lambda d: _mp(d, persist_intermediates)
     # signatures feed BOTH sides of the band self-join; one row per doc of
     # n_hashes longs (~0.3% of corpus bytes) — materializing signatures is
     # the standard LSH design
@@ -487,7 +472,6 @@ def fuzzy_dedup_incremental(
     threshold: float = 0.2,
     engine: str = "xxhash",
     broadcast_new: bool = True,
-    persist_intermediates: bool = True,
     existing_sig: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental NEAR-duplicate dedup — the fuzzy counterpart of
@@ -508,10 +492,9 @@ def fuzzy_dedup_incremental(
     when a backfill batch rivals the corpus and the band match should
     shuffle on (band, bh) instead.  Never corpus x batch all-pairs,
     never a corpus self-join."""
-    from ..caching import maybe_persist as _mp
+    from ..caching import maybe_persist
 
     rows_per_band = _check_lsh_params(n_hashes, bands)
-    maybe_persist = lambda d: _mp(d, persist_intermediates)
     if existing_sig is not None:
         existing_sig = _validate_signature_frame(existing_sig, n_hashes, k, engine)
     # the batch's bands and shingles feed both the cross match and the
@@ -523,7 +506,6 @@ def fuzzy_dedup_incremental(
         existing_df, new_df, "old_id", "new_id", id_col, text_col,
         n_hashes, bands, k, threshold, engine,
         broadcast_small=broadcast_new,
-        persist_intermediates=persist_intermediates,
         banded_small=banded_n, ex_small=ex_n, sig_large=existing_sig,
     )
     within_cand = (
@@ -924,7 +906,6 @@ def contaminated_ids_bloom(
     n: int = 13,
     m_bits: int = 1 << 20,
     k_hashes: int = 5,
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """``contaminated_ids`` semantics behind a broadcast Bloom prefilter —
     bit-identical output (Bloom has no false negatives; false positives
@@ -942,7 +923,7 @@ def contaminated_ids_bloom(
     probe of a 100 MB hash relation.
 
     ``bench_grams`` feeds two consumers (the bitmap-build action and the
-    verify join), so it is persisted by default; release via
+    verify join), so it is persisted; release via
     ``caching.scoped_intermediates`` in long-lived drivers.
 
     Reference analog: membership prefilters in front of exact joins are
@@ -952,7 +933,7 @@ def contaminated_ids_bloom(
     from ..caching import maybe_persist
     from ..functions.bloom import bloom_might_contain, build_bloom_bitmap
 
-    bench_grams = maybe_persist(bench_grams, persist_intermediates)
+    bench_grams = maybe_persist(bench_grams)
     bitmap = build_bloom_bitmap(bench_grams, "gram", m_bits, k_hashes)
     exploded = df.select(
         F.col(id_col), F.explode(_word_ngrams(text_col, n)).alias("gram")
@@ -968,7 +949,6 @@ def substring_dup_docs(
     text_col: str = "text",
     w: int = 15,
     engine: str = "xxhash",
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """Exact-substring duplicate detection (the ExactSubstr rule of Lee et
     al. 2022, "Deduplicating Training Data Makes Language Models Better"):
@@ -991,7 +971,7 @@ def substring_dup_docs(
     reproducible 60-bit twin).  One explode + one gram-keyed aggregate +
     one join-back — no self-join, no all-pairs.  The hashed window stream
     feeds BOTH the owner aggregate and the join-back, so it is persisted
-    by default (corpus scan + tokenize runs once, not twice); release via
+    (corpus scan + tokenize runs once, not twice); release via
     ``caching.scoped_intermediates`` in long-lived drivers.
     """
     from ..caching import maybe_persist
@@ -1000,8 +980,7 @@ def substring_dup_docs(
         df.select(
             F.col(id_col).alias("_id"),
             F.explode(_word_ngrams(text_col, w)).alias("gram"),
-        ).select("_id", _seeded_hash64(F.col("gram"), 0, engine).alias("gh")),
-        persist_intermediates,
+        ).select("_id", _seeded_hash64(F.col("gram"), 0, engine).alias("gh"))
     )
     owners = ex.groupBy("gh").agg(
         F.min("_id").alias("_owner"), F.count(F.lit(1)).alias("_df")
@@ -1025,7 +1004,6 @@ def strip_domain_boilerplate(
     chunk_size: int = 8,
     min_count: int = 2,
     frac: tuple[int, int] = (1, 2),
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """Per-domain boilerplate removal: a line is boilerplate for a domain
     when it appears in at least ``min_count`` docs AND in at least
@@ -1052,7 +1030,7 @@ def strip_domain_boilerplate(
     stream never carries counts.  Documents whose every line is
     boilerplate drop out (same removal policy as the corpus-lines op).
     The exploded line stream feeds BOTH the frequency aggregate and the
-    anti join, so it is persisted by default (the corpus scan + chunk
+    anti join, so it is persisted (the corpus scan + chunk
     transform runs once); release via ``caching.scoped_intermediates``.
     """
     from ..caching import maybe_persist
@@ -1066,8 +1044,7 @@ def strip_domain_boilerplate(
             F.posexplode(chunk_tokens(F.col(text_col), chunk_size)).alias(
                 "pos", "line"
             ),
-        ),
-        persist_intermediates,
+        )
     )
     totals = df.groupBy(domain_col).agg(F.count(F.lit(1)).alias("_docs"))
     freq = (

@@ -68,7 +68,6 @@ def edit_distance_join(
     base = maybe_persist(
         df.select(F.col(id_col).alias("id"), F.col(str_col).alias("s"))
         .where(F.col(str_col).isNotNull()),
-        True,
     )
 
     # -- index entries: the k+1 segments of every string >= k+1 long.

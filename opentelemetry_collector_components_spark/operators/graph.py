@@ -80,7 +80,6 @@ def pagerank_quantized(
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct(),
-        True,
     )
     n_v = nodes.count()
     if n_v == 0:
@@ -93,7 +92,7 @@ def pagerank_quantized(
     if w_min is None or w_min <= 0:
         raise ValueError(f"edge weights must be positive, got min={w_min}")
     out_w = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
-    weighted = maybe_persist(edges.join(out_w, "src"), True)
+    weighted = maybe_persist(edges.join(out_w, "src"))
 
     teleport = (MICRO * (100 - damping_pct) // 100) // n_v
     ranks = nodes.withColumn("rank_micro", F.lit(MICRO // n_v))
@@ -174,9 +173,8 @@ def hits_quantized(edges: DataFrame, iterations: int = 3) -> DataFrame:
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct(),
-        True,
     )
-    e = maybe_persist(edges.select("src", "dst", "weight"), True)
+    e = maybe_persist(edges.select("src", "dst", "weight"))
     scores = nodes.select(
         "node", F.lit(MICRO).alias("hub_micro"), F.lit(MICRO).alias("auth_micro")
     )
@@ -268,13 +266,12 @@ def personalized_pagerank(
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct(),
-        True,
     )
     w_min = edges.agg(F.min("weight")).collect()[0][0]
     if w_min is None or w_min <= 0:
         raise ValueError(f"edge weights must be positive, got min={w_min}")
     out_w = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
-    weighted = maybe_persist(edges.join(out_w, "src"), True)
+    weighted = maybe_persist(edges.join(out_w, "src"))
 
     n_s = len(seeds)
     is_seed = F.col("node").isin(seeds)

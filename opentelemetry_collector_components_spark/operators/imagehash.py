@@ -250,7 +250,6 @@ def video_near_dup_pairs(
         frame_hashes.select(
             "media_id", "frame_idx", "n_frames", "d0", "d1", "d2", "d3"
         ),
-        True,
     )
     entries = h.select(
         "media_id", "frame_idx",
@@ -324,7 +323,7 @@ def image_near_dup_pairs(
 
     # persisted for the same reason as video_near_dup_pairs: four plan
     # references would re-run the image decode+dhash stage each
-    h = maybe_persist(hashes.select("media_id", "d0", "d1", "d2", "d3"), True)
+    h = maybe_persist(hashes.select("media_id", "d0", "d1", "d2", "d3"))
     entries = h.select(
         "media_id",
         F.explode(

@@ -68,9 +68,7 @@ def kmeans_parallel_seeds(
         f"transform({vec_col},"
         f" x -> CAST(ROUND(CAST(x AS DOUBLE) * {scale}) AS BIGINT))"
     )
-    qdf = maybe_persist(
-        emb.select(F.col(id_col).alias("_id"), q.alias("_q")), True
-    )
+    qdf = maybe_persist(emb.select(F.col(id_col).alias("_id"), q.alias("_q")))
     first = (
         qdf.select(
             "_id", "_q", md5_hash60(F.col("_id").cast("string")).alias("_h")

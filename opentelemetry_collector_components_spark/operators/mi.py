@@ -49,9 +49,7 @@ def _contingency(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     base = df.select(a, b).where(
         F.col(col_a).isNotNull() & F.col(col_b).isNotNull()
     )
-    return maybe_persist(
-        base.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c_ab")), True
-    )
+    return maybe_persist(base.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c_ab")))
 
 
 def _pmi_cells(joint: DataFrame) -> DataFrame:

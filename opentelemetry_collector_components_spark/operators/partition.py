@@ -192,7 +192,6 @@ def global_positions(
     order_cols: list[str],
     pos_col: str = "pos",
     partitions: int | None = None,
-    persist: bool = True,
 ):
     """0-based dense global rank of every row under the total order
     ``order_cols`` — WITHOUT the unpartitioned-window scale killer.
@@ -205,7 +204,7 @@ def global_positions(
     row_number — each window is bounded by one range partition.  The
     positions are independent of where the range boundaries fall, so the
     sampling inside repartitionByRange cannot affect the result; the
-    frame is persisted (default) so the size pass and the caller's pass
+    frame is persisted so the size pass and the caller's pass
     see the SAME physical partitioning (register via
     ``caching.scoped_intermediates`` to bound the cache lifetime).
 
@@ -216,9 +215,7 @@ def global_positions(
     from ..caching import maybe_persist
 
     nparts = partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = maybe_persist(
-        df.repartitionByRange(nparts, *order_cols), persist
-    )
+    ranged = maybe_persist(df.repartitionByRange(nparts, *order_cols))
     sizes = (
         ranged.groupBy(F.spark_partition_id().alias("_pid"))
         .count()

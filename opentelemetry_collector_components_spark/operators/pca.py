@@ -82,6 +82,8 @@ def pca_power_quantized(
         raise ValueError(
             f"{n} rows exceeds max_rows={max_rows} (BIGINT magnitude budget)"
         )
+    if not body:
+        raise ValueError("empty or NULL embedding vectors: no coordinates to project")
     counts = {r.cnt for r in body}
     if len(counts) > 1 or c_null:  # a short row would NULL out of zip_with
         raise ValueError("ragged embedding arrays: row sizes differ")
@@ -98,7 +100,6 @@ def pca_power_quantized(
                 f" BIGINT) - element_at({m_lit}, k + 1))"
             ).alias("c"),
         ),
-        True,
     )
 
     v = [out_scale] * dims

@@ -72,7 +72,6 @@ def resolve_redirects(
             ).alias("_is_redir"),
             nxt.alias("_next"),
         ),
-        True,
     )
     # T1: one entry per redirect source — follow exactly one redirect.
     # An entry's dest may or may not be another redirect source; chains
@@ -84,7 +83,6 @@ def resolve_redirects(
             F.col("_next").alias("dst"),
             F.lit(1).cast("long").alias("steps"),
         ),
-        True,
     )
 
     def compose(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -109,7 +107,7 @@ def resolve_redirects(
     powers: list[DataFrame] = [trans]
     j = 0
     while (2 << j) <= max_hops:
-        powers.append(maybe_persist(compose(powers[j], powers[j]), True))
+        powers.append(maybe_persist(compose(powers[j], powers[j])))
         j += 1
 
     # apply the binary decomposition of max_hops to every url: the state

@@ -228,7 +228,7 @@ def pack_sequences(
     when ``df`` is an expensive subplan (e.g. a whole sampling+chunking
     chain), pass ``persist_input=True`` to cache it across both passes —
     consume inside ``caching.scoped_intermediates()`` to bound the cache
-    lifetime, mirroring the dedup persist_intermediates pattern."""
+    lifetime."""
     from pyspark.sql.types import NumericType
 
     shardable = (
@@ -239,7 +239,7 @@ def pack_sequences(
     if shardable and persist_input:
         from ..caching import maybe_persist
 
-        df = maybe_persist(df, True)
+        df = maybe_persist(df)
     bounds = _shard_boundaries(df, id_col, shards) if shardable else []
     if not bounds:
         # single-level fallback: one window per part, no extra join
@@ -321,7 +321,6 @@ def dsir_importance_scores(
     text_col: str = "text",
     buckets: int = 1024,
     engine: str = "md5",
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """DSIR importance weights (Xie et al., "Data Selection for Language
     Models via Importance Resampling", NeurIPS 2023): score every raw
@@ -355,10 +354,7 @@ def dsir_importance_scores(
     # the raw feature stream feeds TWO actions (the p-histogram and the
     # final scoring join); persist so the corpus explode runs once
     # (unpersist via caching.scoped_intermediates in long-lived drivers)
-    fb_raw = maybe_persist(
-        _hashed_feature_buckets(df, id_col, text_col, buckets, engine),
-        persist_intermediates,
-    )
+    fb_raw = maybe_persist(_hashed_feature_buckets(df, id_col, text_col, buckets, engine))
     fb_tgt = _hashed_feature_buckets(target, id_col, text_col, buckets, engine)
     p = {int(r["b"]): int(r["n"]) for r in fb_raw.groupBy("b").agg(F.count(F.lit(1)).alias("n")).collect()}
     q = {int(r["b"]): int(r["n"]) for r in fb_tgt.groupBy("b").agg(F.count(F.lit(1)).alias("n")).collect()}

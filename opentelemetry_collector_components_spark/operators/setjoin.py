@@ -149,7 +149,6 @@ def jaccard_prefix_join(
     text_col: str = "text",
     threshold: float | tuple[int, int] = 0.6,
     weighted: bool = False,
-    persist_tokens: bool = True,
 ) -> DataFrame:
     """All pairs (id_a < id_b) with word Jaccard >= threshold, EXACTLY.
 
@@ -163,10 +162,8 @@ def jaccard_prefix_join(
 
     Output: (id_a, id_b, common, n_a, n_b, jaccard) — counts as BIGINT,
     jaccard rounded 4dp for presentation AFTER the exact integer
-    threshold test.  ``persist_tokens`` (default True) caches the
-    shared ordered-element table across the candidate and verify
-    branches — see the inline note.  See module docstring for the
-    filter chain and its cost bound.
+    threshold test.  See module docstring for the filter chain and its
+    cost bound.
     """
     frac = _threshold_fraction(threshold)
     num, den = frac.numerator, frac.denominator
@@ -177,10 +174,7 @@ def jaccard_prefix_join(
     # caching.scoped_intermediates() to bound the cache lifetime.
     from ..caching import maybe_persist
 
-    ordered = maybe_persist(
-        _ordered_token_sets(df, id_col, text_col, weighted=weighted),
-        persist_tokens,
-    )
+    ordered = maybe_persist(_ordered_token_sets(df, id_col, text_col, weighted=weighted))
     docs_a = ordered.select(
         F.col("_id").alias("id_a"),
         F.col("toks").alias("toks_a"),

@@ -787,7 +787,6 @@ def semantic_dedup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int = 4,
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """Within-cluster near-duplicate pairs: assign each vector to its
     max-cosine centroid (literal centroids — broadcast by construction, a
@@ -799,15 +798,12 @@ def semantic_dedup_pairs(
     the knob that bounds per-task cost (k ~ sqrt(n) keeps blocks ~sqrt(n)).
     A pathologically popular cluster is the skew risk — the mitigation is
     more centroids (finer clustering), not salting: correctness requires
-    co-locating a whole cluster.  Never an all-pairs cross join.
-    ``persist_intermediates`` caches the assignment projection, which
-    otherwise re-runs the K-cosine assign map once per self-join side
-    (cache lifetime caveats as in ``dedup.minhash_lsh_pairs``)."""
+    co-locating a whole cluster.  Never an all-pairs cross join."""
     from ..caching import maybe_persist
 
-    assigned = maybe_persist(
-        _cluster_assigned(df, centroids, id_col, vec_col), persist_intermediates
-    )
+    # the assignment projection feeds both self-join sides; persisted, the
+    # K-cosine assign map runs once instead of once per side
+    assigned = maybe_persist(_cluster_assigned(df, centroids, id_col, vec_col))
     return _pairs_from_assigned(assigned, threshold, round_to)
 
 
@@ -886,20 +882,17 @@ def semantic_dedup_survivors(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """SemDeDup removal policy: drop every vector with a lower-id semantic
     near-duplicate in its own cluster (same min-id-survives trade as
     ``dedup.near_dedup_survivors``, documented there).  Returns the
     surviving rows of ``df`` unchanged plus their ``cluster_id``.  The
     K-cosine assignment is computed ONCE and shared by both self-join
-    sides and the survivor projection (persisted by default — it is the
-    dominant stage at paper-scale centroid counts)."""
+    sides and the survivor projection (persisted — it is the dominant
+    stage at paper-scale centroid counts)."""
     from ..caching import maybe_persist
 
-    assigned = maybe_persist(
-        _cluster_assigned(df, centroids, id_col, vec_col), persist_intermediates
-    )
+    assigned = maybe_persist(_cluster_assigned(df, centroids, id_col, vec_col))
     pairs = _pairs_from_assigned(assigned, threshold, round_to=4)
     removed = pairs.select(F.col("id_b").alias("_id")).distinct()
     keep = assigned.select("_id", "_cluster").join(removed, "_id", "left_anti")

@@ -108,7 +108,7 @@ def skyline(
             if len(pdf):
                 yield _local_frontier(pdf, cols, signs)
 
-    cand = maybe_persist(df.mapInPandas(prune, df.schema), True)
+    cand = maybe_persist(df.mapInPandas(prune, df.schema))
     # Materialize the persist once here so both join sides below read
     # the cache instead of re-running the prune; the NULL/NaN guard
     # fires inside the UDF during this same pass (no separate guard

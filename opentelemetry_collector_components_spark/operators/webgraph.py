@@ -361,14 +361,12 @@ def triangle_counts(
         edges.where(a != b)
         .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
         .distinct(),
-        True,
     )
     deg = maybe_persist(
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg")),
-        True,
     )
     ranked = (
         und.join(deg.select(F.col("node").alias("u"), F.col("deg").alias("du")), "u")
@@ -384,7 +382,6 @@ def triangle_counts(
             .otherwise(F.struct(F.col("v").alias("lo"), F.col("u").alias("hi")))
             .alias("e")
         ).select(F.col("e.lo").alias("lo"), F.col("e.hi").alias("hi")),
-        True,
     )
     w1 = fwd.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     w2 = fwd.select(F.col("lo").alias("a"), F.col("hi").alias("c"))
@@ -397,7 +394,6 @@ def triangle_counts(
             ["b", "c"],
             "left_semi",
         ),
-        True,
     )
     per_corner = (
         closed.select(F.col("a").alias("node"))
@@ -457,7 +453,6 @@ def bfs_depths(
         edges.select(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
         ).distinct(),
-        True,
     )
     dist = (
         seeds.select(F.col(seeds.columns[0]).alias("node"))
@@ -525,10 +520,9 @@ def bowtie_decomposition(
         edges.select(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
         ).distinct(),
-        True,
     )
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    und = maybe_persist(e.unionByName(rev).distinct(), True)
+    und = maybe_persist(e.unionByName(rev).distinct())
     nodes = und.select(F.col("src").alias("node")).distinct()
     pivot = (
         und.groupBy("src")
@@ -537,13 +531,9 @@ def bowtie_decomposition(
         .limit(1)
         .select(F.col("src").alias("node"))
     )
-    fwd = maybe_persist(
-        bfs_depths(e, pivot, "src", "dst", max_rounds).select("node"), True
-    )
-    bwd = maybe_persist(
-        bfs_depths(rev, pivot, "src", "dst", max_rounds).select("node"), True
-    )
-    scc = maybe_persist(fwd.intersect(bwd), True)
+    fwd = maybe_persist(bfs_depths(e, pivot, "src", "dst", max_rounds).select("node"))
+    bwd = maybe_persist(bfs_depths(rev, pivot, "src", "dst", max_rounds).select("node"))
+    scc = maybe_persist(fwd.intersect(bwd))
     in_set = bwd.join(scc, "node", "left_anti")
     out_set = fwd.join(scc, "node", "left_anti")
     weak = bfs_depths(und, pivot, "src", "dst", max_rounds).select("node")

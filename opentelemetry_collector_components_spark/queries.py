@@ -5394,10 +5394,7 @@ def q_training_pipeline_chunks(spark: SparkSession, sf: str) -> DataFrame:
     )
     # persist_input: the sampling+chunking subplan would otherwise run
     # twice (once for the eager shard-boundary sketch, once for the real
-    # pass — ADVICE r3).  The entry outlives this call deliberately: gate
-    # processes are short-lived and the cache is plan-keyed (repeat runs
-    # reuse one entry); a long-lived driver would consume inside
-    # caching.scoped_intermediates() instead.
+    # pass — ADVICE r3).
     packed = pack_sequences(
         chunks, budget=64, id_col="chunk_uid", token_col="n_tokens",
         persist_input=True,
@@ -21488,7 +21485,6 @@ def q_pipeline_e2e_pages(spark: SparkSession, sf: str) -> DataFrame:
         routed,
         keys=["sink", "geo", "namespace"],
         intervals=("1m", "60m"),
-        persist_base=False,
     )
     return out.select(
         _fmt_ts(F.col("window_start")).alias("window_start"),

@@ -163,6 +163,7 @@ def generate_iceberg_table(
     """
     import pandas as pd
 
+    from ..caching import maybe_persist
     from ..functions.avro_codec import write_container
 
     files = events.groupBy((F.col("event_id") % n_files).alias("i")).agg(
@@ -241,7 +242,7 @@ def generate_iceberg_table(
         .groupBy("g")
         .applyInPandas(_replacements, schema="path string, content binary")
     )
-    blobs = manifests.unionByName(manifests_s1).unionByName(merged).cache()
+    blobs = maybe_persist(manifests.unionByName(manifests_s1).unionByName(merged))
     # each manifest list needs its manifests' byte lengths — 7 rows,
     # small-by-construction
     lengths = {r["path"]: len(r["content"]) for r in blobs.collect()}

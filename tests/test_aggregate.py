@@ -5,6 +5,7 @@ from pyspark.sql import functions as F
 from opentelemetry_collector_components_spark.operators.aggregate import (
     aggregate_base_interval,
     interval_rollup,
+    interval_rollup_union,
 )
 from opentelemetry_collector_components_spark.operators.enrich import (
     derive_event_fields,
@@ -36,6 +37,35 @@ def test_rollup_equals_direct(spark):
     cols = ["window_start", "sink", "docs", "dur_us_sum", "success_count", "failure_count", "dur_us_min", "dur_us_max"]
     assert _as_sorted_rows(out["10m"], cols) == _as_sorted_rows(direct_10m, cols)
     routed.unpersist()
+
+
+def test_rollup_union_matches_rollup_scans_once_caches_nothing(spark):
+    """interval_rollup_union == interval_rollup per interval; the executed
+    plan scans the input once (the coarser branches read the base's
+    shuffle as a ReusedExchange) and the call leaves no persisted RDD."""
+    n = 2000
+    routed = _routed(spark, n)
+    keys = ["sink", "geo"]
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = persistent().size()
+    out = interval_rollup_union(routed, keys=keys)
+    assert persistent().size() == before
+    rows = out.collect()
+    assert persistent().size() == before
+
+    cols = out.columns
+    expected = interval_rollup(routed, keys=keys, distinct_mode=None)
+    assert sorted(expected) == ["10m", "1m", "60m"]
+    for ivl, frame in expected.items():
+        got = sorted(
+            tuple(r[c] for c in cols) for r in rows if r["metricset_interval"] == ivl
+        )
+        assert got == _as_sorted_rows(frame, cols), ivl
+
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert final.count(f"Range (0, {n},") == 1
+    assert final.count("ReusedExchange") == 2
 
 
 def test_totals_conserved(spark):

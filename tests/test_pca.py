@@ -72,3 +72,17 @@ def test_guards(spark):
     )
     with pytest.raises(ValueError, match="degenerate"):
         pca_power_quantized(flat)
+
+
+def test_empty_or_null_vectors_vs_ragged(spark):
+    schema = "vec_id long, embedding array<double>"
+    all_empty = spark.createDataFrame([(i, []) for i in range(4)], schema)
+    all_null = spark.createDataFrame([(i, None) for i in range(4)], schema)
+    for df in (all_empty, all_null):
+        with pytest.raises(ValueError, match="empty or NULL embedding vectors"):
+            pca_power_quantized(df)
+    ragged = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0]), (1, [1.0, 2.0]), (2, [4.0, 5.0, 6.0])], schema
+    )
+    with pytest.raises(ValueError, match="ragged"):
+        pca_power_quantized(ragged)

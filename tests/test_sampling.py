@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -159,29 +160,117 @@ def test_chunk_documents_overlap_and_bounds(spark):
         chunk_documents(df, 4, 4)
 
 
-def test_scoped_intermediates_unpersists(spark):
-    """caching.scoped_intermediates bounds operator cache lifetime: the
-    intermediates persisted inside the block are gone after exit."""
-    from pyspark import StorageLevel
+# operators that cache intermediates through caching.maybe_persist, and the
+# rollup, which must cache nothing at all
+_SCOPED_OPS = [
+    "pack_sequences",
+    "minhash_lsh_pairs",
+    "contaminated_ids_fuzzy",
+    "fuzzy_dedup_incremental",
+    "contaminated_ids_bloom",
+    "substring_dup_docs",
+    "strip_domain_boilerplate",
+    "semantic_dedup_pairs",
+    "semantic_dedup_survivors",
+    "dsir_importance_scores",
+    "jaccard_prefix_join",
+    "global_positions",
+    "generate_iceberg_table",
+    "interval_rollup_union",
+]
 
+
+@pytest.mark.parametrize("op", _SCOPED_OPS)
+def test_scoped_intermediates_unpersists(spark, sf_dir, op):
+    """caching.scoped_intermediates bounds operator cache lifetime: the
+    intermediates persisted inside the block are gone after exit, and the
+    context's persistent-RDD map is back to its entry size."""
     from opentelemetry_collector_components_spark.caching import (
         scoped_intermediates,
     )
-    from opentelemetry_collector_components_spark.operators.sampling import (
-        pack_sequences,
+    from opentelemetry_collector_components_spark.operators import (
+        dedup,
+        sampling,
+        setjoin,
+        similarity,
+    )
+    from opentelemetry_collector_components_spark.operators.aggregate import (
+        interval_rollup_union,
+    )
+    from opentelemetry_collector_components_spark.operators.partition import (
+        global_positions,
+    )
+    from opentelemetry_collector_components_spark.plans.pipeline import DEFAULT_SPEC
+    from opentelemetry_collector_components_spark.queries import load
+    from opentelemetry_collector_components_spark.sources.iceberg_meta import (
+        generate_iceberg_table,
+    )
+    from opentelemetry_collector_components_spark.sources.pages import (
+        generate_pages,
     )
 
-    df = spark.range(200).selectExpr(
-        "id AS doc_id", "concat('s', id % 3) AS source", "10 + id % 7 AS n_tokens"
+    shared = " ".join(f"w{i}" for i in range(15))
+    docs = spark.createDataFrame(
+        [(i, f"{shared} tail{i % 3} x{i}", f"site{i % 2}") for i in range(12)],
+        "doc_id long, text string, source string",
     )
-    with scoped_intermediates() as handles:
-        out = pack_sequences(
-            df, budget=64, shards=4, persist_input=True
-        ).collect()
-        assert len(out) == 200
-        assert len(handles) == 1
-        assert handles[0].storageLevel != StorageLevel.NONE
-    assert handles[0].storageLevel == StorageLevel.NONE
+    small = docs.where("doc_id < 4")
+    vecs = spark.createDataFrame(
+        [(i, [1.0, 0.01 * i, 0.0]) for i in range(8)],
+        "vec_id long, embedding array<double>",
+    )
+    cents = [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])]
+    build = {
+        "pack_sequences": lambda: sampling.pack_sequences(
+            spark.range(200).selectExpr(
+                "id AS doc_id", "concat('s', id % 3) AS source", "10 + id % 7 AS n_tokens"
+            ),
+            budget=64, shards=4, persist_input=True,
+        ),
+        "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(docs, threshold=0.2),
+        "contaminated_ids_fuzzy": lambda: dedup.contaminated_ids_fuzzy(
+            docs, small, threshold=0.2
+        ),
+        "fuzzy_dedup_incremental": lambda: dedup.fuzzy_dedup_incremental(
+            small, docs.where("doc_id >= 4"), threshold=0.2
+        ),
+        "contaminated_ids_bloom": lambda: dedup.contaminated_ids_bloom(
+            docs, dedup.contamination_ngrams(small, n=13), m_bits=1 << 12
+        ),
+        "substring_dup_docs": lambda: dedup.substring_dup_docs(docs, w=15),
+        "strip_domain_boilerplate": lambda: dedup.strip_domain_boilerplate(
+            docs, chunk_size=8
+        ),
+        "semantic_dedup_pairs": lambda: similarity.semantic_dedup_pairs(
+            vecs, cents, threshold=0.99
+        ),
+        "semantic_dedup_survivors": lambda: similarity.semantic_dedup_survivors(
+            vecs, cents, threshold=0.99
+        ),
+        "dsir_importance_scores": lambda: sampling.dsir_importance_scores(
+            docs, small, buckets=64
+        ),
+        "jaccard_prefix_join": lambda: setjoin.jaccard_prefix_join(
+            docs, threshold=(1, 2)
+        ),
+        "global_positions": lambda: global_positions(docs, ["source", "doc_id"]),
+        # n_files no other caller uses: Spark's cache is keyed by plan, and an
+        # entry left by another caller would be reused rather than added
+        "generate_iceberg_table": lambda: generate_iceberg_table(
+            load(spark, sf_dir, "events"), n_files=7
+        )[1],
+        "interval_rollup_union": lambda: interval_rollup_union(
+            DEFAULT_SPEC.build(generate_pages(spark, 500), spark), keys=["sink"]
+        ),
+    }[op]
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    entry = persistent().size()
+    with scoped_intermediates():
+        build().collect()
+        # the rollup's branches share the base through exchange reuse; every
+        # other operator caches at least one intermediate
+        assert (persistent().size() > entry) == (op != "interval_rollup_union")
+    assert persistent().size() == entry
 
 
 def test_pack_sequences_persist_input_same_output(spark):
@@ -223,11 +312,11 @@ def test_dsir_importance_ranks_target_like_docs_higher(spark):
         [(1000 + i, target_text) for i in range(5)], "doc_id long, text string"
     )
     out = {r.doc_id: r.score_micro for r in dsir_importance_scores(
-        docs, target, buckets=256, persist_intermediates=False
+        docs, target, buckets=256
     ).collect()}
     assert min(out[i] for i in range(10)) > max(out[100 + i] for i in range(10))
     again = {r.doc_id: r.score_micro for r in dsir_importance_scores(
-        docs, target, buckets=256, persist_intermediates=False
+        docs, target, buckets=256
     ).collect()}
     assert out == again
 
