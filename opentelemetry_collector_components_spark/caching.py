@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 _ACTIVE_TRACKERS: list[list[DataFrame]] = []
@@ -32,10 +33,16 @@ _ACTIVE_TRACKERS: list[list[DataFrame]] = []
 
 def maybe_persist(df: DataFrame) -> DataFrame:
     """Persist ``df``, registering the handle with every active
-    ``scoped_intermediates`` block so exit can unpersist it."""
+    ``scoped_intermediates`` block so exit can unpersist it.
+
+    A plan that is already cached (Spark keys its cache by plan, so
+    another caller's entry matches) is left unregistered: the scope did
+    not create that entry and must not release it."""
+    cached = df.storageLevel != StorageLevel.NONE
     df = df.persist()
-    for tracker in _ACTIVE_TRACKERS:
-        tracker.append(df)
+    if not cached:
+        for tracker in _ACTIVE_TRACKERS:
+            tracker.append(df)
     return df
 
 

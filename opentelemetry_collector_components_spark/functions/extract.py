@@ -5,7 +5,7 @@ Analog of the reference's receiver-side decoders: NDJSON field mapping
 and beats text/csv/json decoding with field mappings
 (extension/beatsencodingextension/extension.go:75-284).
 
-Two engines, identical semantics (tested byte-identical):
+Two log-extract engines, identical semantics (tested byte-identical):
 
 - ``extract_log_pandas``  — ONE vectorized ``pandas_udf`` applying a single
   compiled multi-group regex per Arrow batch (``Series.str.extract``).  This
@@ -13,8 +13,8 @@ Two engines, identical semantics (tested byte-identical):
   grok-style compiled-regex extraction").  The regex is compiled once per
   executor (module import time), not per batch.
 - ``extract_log_sql``     — pure JVM ``regexp_extract`` per field; stays in
-  whole-stage codegen, no Python exchange.  Preferred in the hot pipeline
-  when the pattern set is small.
+  whole-stage codegen, no Python exchange.  The hot-path engine:
+  ``parse_pages``' default.
 
 The per-row invariant (BASELINE.json input_hint): extracted text per url is
 byte-identical between engines and across runs — extraction is a pure
@@ -176,38 +176,6 @@ def extract_log_sql(text: Column) -> Column:
         _f(r"code=(\d+)").alias("code"),
         _f(r"dur_us=(\d+)").alias("dur_us"),
         _f(r'msg="([^"]*)"').alias("msg"),
-    )
-
-
-def extract_log_fast(text: Column) -> Column:
-    """Single-pass k=v extraction — the hot-path engine.
-
-    One ``str_to_map`` over the key=value head + two substring_index calls
-    for the quoted msg: zero regex work per row, all whole-stage codegen.
-    Byte-identical to the regex engines on the well-formed k=v framing the
-    generator emits (including its malformed rows — tested); unlike the
-    regex engines it does NOT validate value shapes (a non-numeric
-    ``code=`` value passes through), so keep the regex engines for
-    untrusted input.
-    """
-    head = F.substring_index(text, ' msg="', 1)
-    kv = F.str_to_map(head, F.lit(" "), F.lit("="))
-
-    def _get(key: str) -> Column:
-        return F.element_at(kv, F.lit(key))
-
-    level = _get("level")
-    msg_tail = F.substring_index(text, ' msg="', -1)
-    msg = F.when(
-        text.contains(' msg="'), F.substring_index(msg_tail, '"', 1)
-    ).otherwise(F.lit(None).cast("string"))
-    return F.struct(
-        _get("ts").alias("ts_str"),
-        F.when(level.isin("INFO", "WARN", "ERROR"), level).alias("level"),
-        _get("svc").alias("svc"),
-        _get("code").alias("code"),
-        _get("dur_us").alias("dur_us"),
-        msg.alias("msg"),
     )
 
 

@@ -12,8 +12,13 @@ Scale design
 - The reference copies every batch under EVERY interval key (1m/10m/60m
   each get a full copy, processor.go:399-413).  We aggregate ONCE at the
   finest interval and roll coarser intervals up from the 1-minute partials
-  — legal because every merge used is associative.  At 100 TB this turns 3
-  full-data shuffles into 1 full shuffle + 2 shuffles over tiny partials.
+  — legal because every merge used is associative.  This turns 3
+  full-data shuffles into 1 full shuffle + 1 shuffle of the 1m partials,
+  copied once per interval label (``fold_intervals``, the one interval
+  fold every rollup here and in ``streaming/interval.py`` uses).  The
+  second shuffle scales with the number of 1m groups, not input rows: it
+  is small only when each 1m group holds many rows; with high-cardinality
+  keys (about one group per row) it is about as large as the first.
 - Window keys are computed with integer epoch arithmetic (``date_trunc`` /
   floor-div), not the ``window()`` struct: scalar group keys keep the
   aggregate inside whole-stage codegen (HashAggregate), where struct keys +
@@ -31,6 +36,8 @@ connector/elasticapmconnector/config.go:172-180).
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -39,10 +46,11 @@ _IVL_SECONDS = {"1m": 60, "10m": 600, "60m": 3600}
 DEFAULT_INTERVALS = {"1m": "1 minute", "10m": "10 minutes", "60m": "60 minutes"}
 
 
-def trunc_to_interval(ts: Column, interval: str) -> Column:
+def trunc_to_interval(ts: Column, interval: str | Column) -> Column:
     """Tumbling-window start via epoch floor-division (codegen-friendly;
-    the processor's truncate-to-interval, processor.go:159,249,463)."""
-    secs = _IVL_SECONDS[interval]
+    the processor's truncate-to-interval, processor.go:159,249,463).
+    ``interval`` is a label of ``_IVL_SECONDS`` or a column of seconds."""
+    secs = _IVL_SECONDS[interval] if isinstance(interval, str) else interval
     return F.timestamp_seconds((F.unix_timestamp(ts) / secs).cast("long") * secs)
 
 
@@ -62,6 +70,21 @@ def _metric_aggs(distinct_mode: str | None) -> list[Column]:
     return aggs
 
 
+# each partial column's associative re-aggregation
+_REAGG = {
+    "docs": F.sum,
+    "dur_us_sum": F.sum,
+    "success_count": F.sum,
+    "failure_count": F.sum,
+    "dur_us_min": F.min,
+    "dur_us_max": F.max,
+    "_svc_hll": F.hll_union_agg,
+    # lower bound only above the finest interval — exact rollups must
+    # re-aggregate from raw
+    "svc_distinct": F.max,
+}
+
+
 def aggregate_base_interval(
     df: DataFrame,
     keys: list[str],
@@ -77,39 +100,67 @@ def aggregate_base_interval(
     )
 
 
-def rollup_interval(base: DataFrame, keys: list[str], interval: str) -> DataFrame:
-    """Re-aggregate 1m partials into a coarser interval (associative fold —
-    the property pebble's MergeNewer/MergeOlder relies on, merger.go:40-86)."""
-    win = trunc_to_interval(F.col("window_start"), interval)
-    aggs = [
-        F.sum("docs").alias("docs"),
-        F.sum("dur_us_sum").alias("dur_us_sum"),
-        F.sum("success_count").alias("success_count"),
-        F.sum("failure_count").alias("failure_count"),
-        F.min("dur_us_min").alias("dur_us_min"),
-        F.max("dur_us_max").alias("dur_us_max"),
-    ]
-    if "_svc_hll" in base.columns:
-        aggs.append(F.hll_union_agg(F.col("_svc_hll")).alias("_svc_hll"))
-    if "svc_distinct" in base.columns:
-        # lower bound only — exact rollups must re-aggregate from raw
-        aggs.append(F.max("svc_distinct").alias("svc_distinct"))
-    out = base.groupBy(win.alias("window_start"), *keys).agg(*aggs)
-    return out.withColumn(
-        "window_end", F.timestamp_seconds(F.unix_timestamp("window_start") + _IVL_SECONDS[interval])
+def fold_intervals(
+    partials: DataFrame, keys: list[str], intervals: Sequence[str], aggs: list[Column]
+) -> DataFrame:
+    """THE interval fold: re-aggregate finest-interval partials into every
+    interval of ``intervals`` with ONE aggregate.  Each partial row is
+    copied once per interval label (one ``inline``, an ``explode`` into
+    scalar columns, over a literal array of ``(label, seconds)`` structs:
+    the reference's copy-under-every-interval-key, processor.go:399-413,
+    applied to the partials instead of raw datapoints), then one
+    ``groupBy(window, keys, label).agg(aggs)`` folds all intervals at
+    once; ``aggs`` must be associative re-aggregations of the partial
+    columns (the property pebble's MergeNewer/MergeOlder relies on,
+    merger.go:40-86).  ``partials`` carries ``window_start`` at the
+    finest interval; folding that interval again is a 1:1 re-group.
+
+    Output: ``window_start, *keys, <aggs>, window_end, metricset_interval``.
+    """
+    labels = F.array(
+        *[
+            F.struct(F.lit(i).alias("_label"), F.lit(_IVL_SECONDS[i]).alias("_secs"))
+            for i in intervals
+        ]
     )
+    secs = F.col("_secs")
+    out = (
+        partials.select("*", F.inline(labels))
+        .groupBy(
+            trunc_to_interval(F.col("window_start"), secs).alias("window_start"),
+            *keys,
+            "_label",
+            "_secs",
+        )
+        .agg(*aggs)
+    )
+    return out.select(
+        "window_start",
+        *keys,
+        *out.columns[len(keys) + 3 :],
+        F.timestamp_seconds(F.unix_timestamp("window_start") + secs).alias("window_end"),
+        F.col("_label").alias("metricset_interval"),
+    )
+
+
+def _decorate(df: DataFrame, dataset_col: str | None = "sink") -> DataFrame:
+    """Harvest-time decoration of a frame that already carries
+    ``metricset_interval``: the ``data_stream.dataset`` interval suffix
+    and the HLL sketch resolved to ``svc_distinct``."""
+    new = {}
+    if dataset_col and dataset_col in df.columns:
+        new["dataset"] = F.concat(F.col(dataset_col), F.lit("."), F.col("metricset_interval"))
+    if "_svc_hll" in df.columns:
+        new["svc_distinct"] = F.hll_sketch_estimate(F.col("_svc_hll"))
+        return df.withColumns(new).drop("_svc_hll")
+    return df.withColumns(new) if new else df
 
 
 def decorate_interval(df: DataFrame, interval: str, dataset_col: str | None = "sink") -> DataFrame:
     """Harvest-time decoration (A9): ``metricset.interval`` attr and
     ``data_stream.dataset`` interval suffix
     (elasticapmconnector/config.go:172-180)."""
-    out = df.withColumn("metricset_interval", F.lit(interval))
-    if dataset_col and dataset_col in df.columns:
-        out = out.withColumn("dataset", F.concat(F.col(dataset_col), F.lit("." + interval)))
-    if "_svc_hll" in out.columns:
-        out = out.withColumn("svc_distinct", F.hll_sketch_estimate(F.col("_svc_hll"))).drop("_svc_hll")
-    return out
+    return _decorate(df.withColumn("metricset_interval", F.lit(interval)), dataset_col)
 
 
 def interval_rollup(
@@ -119,13 +170,11 @@ def interval_rollup(
     intervals: tuple[str, ...] = ("1m", "10m", "60m"),
     distinct_mode: str | None = "hll",
 ) -> dict[str, DataFrame]:
-    """Full multi-interval aggregation: one raw shuffle + cheap rollups."""
+    """Full multi-interval aggregation as one frame per interval: each is
+    the ``interval_rollup_union`` result filtered to its label."""
+    out = interval_rollup_union(df, keys, time_col, intervals, distinct_mode)
     ivls = sorted(intervals, key=lambda i: _IVL_SECONDS[i])
-    base = aggregate_base_interval(df, keys, time_col, ivls[0], distinct_mode=distinct_mode)
-    out = {ivls[0]: decorate_interval(base, ivls[0])}
-    for ivl in ivls[1:]:
-        out[ivl] = decorate_interval(rollup_interval(base, keys, ivl), ivl)
-    return out
+    return {ivl: out.filter(F.col("metricset_interval") == ivl) for ivl in ivls}
 
 
 def interval_rollup_union(
@@ -138,23 +187,19 @@ def interval_rollup_union(
     """All intervals in ONE DataFrame, discriminated by
     ``metricset_interval``, with the raw scan evaluated exactly once.
 
-    Every branch reads the same 1m base aggregate, and the branches are one
-    union plan, so Spark's exchange reuse runs the base's shuffle once and
-    the coarser branches read it as a ``ReusedExchange``: the input is
-    scanned once and nothing is cached.  The coarser intervals roll up the
-    tiny base (#groups = |keys| x minutes), never the input — the same
-    asymmetry the reference exploits by keeping only merged per-interval
-    state in pebble rather than raw datapoints (processor.go:391-425).
+    Two shuffles, nothing cached: the raw input aggregates once at the
+    finest interval, and ``fold_intervals`` folds those partials into
+    every interval with one more aggregate.  The fold reads only the
+    partials (one row per key combination and minute), never the input —
+    the same asymmetry the reference exploits by keeping only merged
+    per-interval state in pebble rather than raw datapoints
+    (processor.go:391-425).  That bounds the fold by the input; it is
+    small only when the keys' 1m groups each hold many rows.
     """
     ivls = sorted(intervals, key=lambda i: _IVL_SECONDS[i])
     base = aggregate_base_interval(df, keys, time_col, ivls[0], distinct_mode=distinct_mode)
-    frames = [decorate_interval(base, ivls[0])]
-    for ivl in ivls[1:]:
-        frames.append(decorate_interval(rollup_interval(base, keys, ivl), ivl))
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    aggs = [fold(c).alias(c) for c, fold in _REAGG.items() if c in base.columns]
+    return _decorate(fold_intervals(base, keys, ivls, aggs))
 
 
 def merge_agg_states(

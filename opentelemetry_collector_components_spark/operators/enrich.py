@@ -60,11 +60,13 @@ def derive_event_fields(parsed: DataFrame) -> DataFrame:
         .when(F.col("code") < 400, F.lit("success"))
         .otherwise(F.lit("failure"))
     )
-    return (
-        parsed.withColumn("event_outcome", outcome)
-        .withColumn("success_count", F.when(F.col("event_outcome") == "success", 1).otherwise(0).cast("long"))
-        .withColumn("failure_count", F.when(F.col("event_outcome") == "failure", 1).otherwise(0).cast("long"))
-        .withColumn("duration_ms", (F.col("dur_us") / F.lit(1000.0)))
+    return parsed.withColumns(
+        {
+            "event_outcome": outcome,
+            "success_count": F.when(outcome == "success", 1).otherwise(0).cast("long"),
+            "failure_count": F.when(outcome == "failure", 1).otherwise(0).cast("long"),
+            "duration_ms": F.col("dur_us") / F.lit(1000.0),
+        }
     )
 
 

@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.extract import (
-    extract_log_fast,
     extract_log_pandas,
     extract_log_sql,
     extract_title,
@@ -42,34 +41,30 @@ def parse_pages(df: DataFrame, engine: str = "sql", with_title: bool = False) ->
         cols.append("doc_id")
     if with_title:
         cols.append("html")
-    pruned = df.select(*cols)
-
     if engine == "pandas":
-        parsed = pruned.withColumn("_p", extract_log_pandas(F.col("text")))
+        extract = extract_log_pandas
     elif engine == "sql":
-        parsed = pruned.withColumn("_p", extract_log_sql(F.col("text")))
-    elif engine == "fast":
-        parsed = pruned.withColumn("_p", extract_log_fast(F.col("text")))
+        extract = extract_log_sql
     else:
-        raise ValueError(f"unknown extraction engine {engine!r}; use 'sql', 'fast' or 'pandas'")
-
-    out = parsed.select(
-        "*",
-        F.col("_p.level").alias("level"),
-        F.col("_p.svc").alias("svc"),
-        F.col("_p.code").cast("int").alias("code"),
+        raise ValueError(f"unknown extraction engine {engine!r}; use 'sql' or 'pandas'")
+    # the struct gets its own projection so the fields below read one
+    # extraction, not one pandas-UDF call per field
+    parsed = df.select(*cols, extract(F.col("text")).alias("_p"))
+    level, svc = F.col("_p.level"), F.col("_p.svc")
+    code = F.col("_p.code").cast("int")
+    out = [c for c in cols if c not in ("text", "html")] + [
+        level.alias("level"),
+        svc.alias("svc"),
+        code.alias("code"),
         F.col("_p.dur_us").cast("long").alias("dur_us"),
         F.col("_p.msg").alias("msg"),
         F.col("_p.ts_str").alias("ts_str"),
-    ).drop("_p", "text")
-
-    out = out.withColumn("domain", url_domain(F.col("url")))
-    # malformed = any required field failed to extract (the 1% fixture rows);
-    # these route to the error sink, mirroring ndjson decode-error records.
-    out = out.withColumn(
-        "malformed",
-        F.col("level").isNull() | F.col("code").isNull() | F.col("svc").isNull(),
-    )
+        url_domain(F.col("url")).alias("domain"),
+        # malformed = any required field failed to extract (the 1% fixture
+        # rows); these route to the error sink, mirroring ndjson
+        # decode-error records.
+        (level.isNull() | code.isNull() | svc.isNull()).alias("malformed"),
+    ]
     if with_title:
-        out = out.withColumn("title", extract_title(F.col("html"))).drop("html")
-    return out
+        out.append(extract_title(F.col("html")).alias("title"))
+    return parsed.select(*out)

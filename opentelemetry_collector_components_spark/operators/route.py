@@ -6,8 +6,9 @@ Two routing mechanisms from the reference, re-expressed declaratively:
    data_stream.go:41-97): deterministic per-row route key — dataset from the
    record's category/service with normalization, errors forced to the error
    dataset.  In Spark this is just a ``when/otherwise`` column; the fan-out
-   itself is either per-sink filtered writes or one ``partitionBy(sink)``
-   write (SURVEY.md R3).
+   itself is a sink write in ``plans/sinks.py`` — one ``partitionBy(sink)``
+   write (``write_fanout``) or per-sink writes (``write_per_sink``),
+   SURVEY.md R3.
 
 2. **cardinality routing** (connector/dynamicroutingconnector/router.go:
    229-361): route chosen per partition-key by the estimated distinct count
@@ -106,18 +107,6 @@ def with_cardinality_route(
     # point — AQE broadcasts it automatically while it fits the threshold
     out = df.join(dec, on=partition_by, how="left")
     return out.withColumn("route", F.coalesce(F.col("route"), F.lit(DEFAULT_ROUTE)))
-
-
-def split_by_route(df: DataFrame, route_col: str = "sink") -> dict[str, DataFrame]:
-    """Tagged DataFrame splits: one filtered view per distinct route.
-
-    The distinct-route list is computed with one tiny aggregate.  For the
-    actual sink writes prefer ``plans.sinks.write_fanout`` (single
-    ``partitionBy`` write — one pass over the data) — this helper exists for
-    per-route post-processing and tests.
-    """
-    routes = [r[0] for r in df.select(route_col).distinct().collect()]
-    return {r: df.filter(F.col(route_col) == r) for r in sorted(routes)}
 
 
 # ---------------------------------------------------------------------------

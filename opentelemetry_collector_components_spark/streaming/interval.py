@@ -21,8 +21,20 @@ equivalence test pins behavior on in-order data where both agree.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _fold_partials(partials: DataFrame, keys: list[str], intervals: Sequence[str]) -> DataFrame:
+    """``(window_start, *keys, docs, value_sum)`` 1m partials folded into
+    every interval of ``intervals`` by ``operators.aggregate.fold_intervals``:
+    ``window_start, *keys, docs, value_sum, metricset_interval``."""
+    from ..operators.aggregate import fold_intervals
+
+    aggs = [F.sum("docs").alias("docs"), F.sum("value_sum").alias("value_sum")]
+    return fold_intervals(partials, keys, intervals, aggs).drop("window_end")
 
 
 def streaming_interval_agg(
@@ -69,17 +81,17 @@ def streaming_interval_rollup(
     intervals: tuple[str, ...] = ("1m", "10m", "60m"),
     query_name: str = "stream_interval_rollup",
 ):
-    """Multi-interval streaming rollup: ONE stateful 1m aggregate; coarser
-    intervals (10m/60m) are derived INSIDE ``foreachBatch`` from the 1m
-    partials — the streaming twin of ``operators.aggregate.
-    interval_rollup_union`` and of the reference's single-copy-per-interval
-    LSM design (processor/lsmintervalprocessor/processor.go:399-413, which
-    it improves on: the reference re-buffers every datapoint once PER
-    interval, here only the finest interval ever sees raw rows).
+    """Multi-interval streaming rollup: ONE stateful 1m aggregate; every
+    interval (1m/10m/60m) is derived INSIDE ``foreachBatch`` from the 1m
+    partials by ``operators.aggregate.fold_intervals``, the same fold
+    ``interval_rollup_union`` runs — the reference's single-copy-per-
+    interval LSM design (processor/lsmintervalprocessor/processor.go:
+    399-413) improved on: the reference re-buffers every datapoint once PER
+    interval, here only the finest interval ever sees raw rows.
 
     Scale shape: the state store holds |keys| x minutes rows (tiny); each
-    micro-batch emits the complete current 1m table, the rollups are
-    aggregates over that tiny frame, and the result overwrites ``out_path``
+    micro-batch emits the complete current 1m table, the rollup is one
+    aggregate over that tiny frame, and the result overwrites ``out_path``
     — so a batch's cost is bounded by partial-table size, never raw input.
     Complete mode re-emits the full partial table every micro-batch —
     fine for a bounded drain, unbounded on a long-lived stream; the
@@ -100,19 +112,7 @@ def streaming_interval_rollup(
     )
 
     def _roll(batch_df: DataFrame, _batch_id: int) -> None:
-        out = batch_df.withColumn("metricset_interval", F.lit(ivls[0]))
-        for ivl in ivls[1:]:
-            win = trunc_to_interval(F.col("window_start"), ivl)
-            rolled = (
-                batch_df.groupBy(win.alias("window_start"), *keys)
-                .agg(
-                    F.sum("docs").alias("docs"),
-                    F.sum("value_sum").alias("value_sum"),
-                )
-                .withColumn("metricset_interval", F.lit(ivl))
-            )
-            out = out.unionByName(rolled)
-        out.write.mode("overwrite").parquet(out_path)
+        _fold_partials(batch_df, keys, ivls).write.mode("overwrite").parquet(out_path)
 
     return (
         base.writeStream.outputMode("complete")
@@ -265,35 +265,17 @@ def read_interval_rollup(
     keys: list[str],
     intervals: tuple[str, ...] = ("1m", "10m", "60m"),
 ) -> DataFrame:
-    """Read-time rollup over the 1m-partials table: coarse intervals are
-    the same associative fold the batch path uses (counts and sums of the
-    finest interval re-sum exactly), so storing only 1m partials loses
-    nothing.  The partials table is tiny (|keys| x minutes), so these
-    folds are broadcast-scale regardless of how much raw stream fed it."""
-    from ..operators.aggregate import _IVL_SECONDS, trunc_to_interval
-
-    ivls = sorted(intervals, key=lambda i: _IVL_SECONDS[i])
-    part = spark.read.parquet(partials_path).drop("part_hour")
+    """Read-time rollup over the 1m-partials table: every interval is the
+    one associative fold the batch path uses (``fold_intervals``; counts
+    and sums of the finest interval re-sum exactly), so storing only 1m
+    partials loses nothing.  The partials table holds one row per key
+    combination and minute, so the fold's cost is bounded by that table,
+    not by how much raw stream fed it."""
     # the finest requested interval is folded too (not just labeled): a
     # no-op re-group when it equals the stored 1m granularity, and the
     # correct aggregation when a caller requests only coarser intervals
-    out = (
-        part.groupBy(
-            trunc_to_interval(F.col("window_start"), ivls[0]).alias("window_start"),
-            *keys,
-        )
-        .agg(F.sum("docs").alias("docs"), F.sum("value_sum").alias("value_sum"))
-        .withColumn("metricset_interval", F.lit(ivls[0]))
-    )
-    for ivl in ivls[1:]:
-        win = trunc_to_interval(F.col("window_start"), ivl)
-        rolled = (
-            part.groupBy(win.alias("window_start"), *keys)
-            .agg(F.sum("docs").alias("docs"), F.sum("value_sum").alias("value_sum"))
-            .withColumn("metricset_interval", F.lit(ivl))
-        )
-        out = out.unionByName(rolled)
-    return out
+    part = spark.read.parquet(partials_path).drop("part_hour")
+    return _fold_partials(part, keys, intervals)
 
 
 def run_stream_to_memory(

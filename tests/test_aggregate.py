@@ -4,8 +4,10 @@ from pyspark.sql import functions as F
 
 from opentelemetry_collector_components_spark.operators.aggregate import (
     aggregate_base_interval,
+    decorate_interval,
     interval_rollup,
     interval_rollup_union,
+    trunc_to_interval,
 )
 from opentelemetry_collector_components_spark.operators.enrich import (
     derive_event_fields,
@@ -40,32 +42,85 @@ def test_rollup_equals_direct(spark):
 
 
 def test_rollup_union_matches_rollup_scans_once_caches_nothing(spark):
-    """interval_rollup_union == interval_rollup per interval; the executed
-    plan scans the input once (the coarser branches read the base's
-    shuffle as a ReusedExchange) and the call leaves no persisted RDD."""
+    """interval_rollup_union == the raw input aggregated directly at each
+    interval, and interval_rollup's frames are its per-interval slices —
+    on a key column with NULL values, for intervals passed unsorted and for
+    a single interval.  The executed plan scans the input once, has no
+    Union and exactly two shuffle Exchanges (the finest-interval base and
+    the one interval fold), and the call leaves no persisted RDD."""
     n = 2000
-    routed = _routed(spark, n)
     keys = ["sink", "geo"]
+    # a NULL key value groups like any other value
+    routed = _routed(spark, n).withColumn(
+        "geo", F.when(F.col("doc_id") % 7 == 0, F.lit(None)).otherwise(F.col("geo"))
+    )
     persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
-    before = persistent().size()
-    out = interval_rollup_union(routed, keys=keys)
-    assert persistent().size() == before
-    rows = out.collect()
-    assert persistent().size() == before
+    for intervals in [("1m", "10m", "60m"), ("60m", "1m", "10m"), ("10m",)]:
+        before = persistent().size()
+        out = interval_rollup_union(routed, keys=keys, intervals=intervals)
+        assert persistent().size() == before
+        rows = out.collect()
+        assert persistent().size() == before
 
-    cols = out.columns
-    expected = interval_rollup(routed, keys=keys, distinct_mode=None)
-    assert sorted(expected) == ["10m", "1m", "60m"]
-    for ivl, frame in expected.items():
-        got = sorted(
-            tuple(r[c] for c in cols) for r in rows if r["metricset_interval"] == ivl
-        )
-        assert got == _as_sorted_rows(frame, cols), ivl
+        cols = out.columns
+        sliced = interval_rollup(routed, keys=keys, intervals=intervals, distinct_mode=None)
+        assert list(sliced) == sorted(intervals, key=lambda i: int(i[:-1]))
+        assert {r["metricset_interval"] for r in rows} == set(intervals)
+        for ivl in intervals:
+            got = sorted(
+                (tuple(r[c] for c in cols) for r in rows if r["metricset_interval"] == ivl),
+                key=repr,
+            )
+            direct = decorate_interval(aggregate_base_interval(routed, keys, interval=ivl), ivl)
+            assert got == sorted(map(tuple, direct.select(*cols).collect()), key=repr), ivl
+            assert got == sorted(map(tuple, sliced[ivl].collect()), key=repr), ivl
+        assert any(r["geo"] is None for r in rows)
 
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
-    assert final.count(f"Range (0, {n},") == 1
-    assert final.count("ReusedExchange") == 2
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+        assert final.count(f"Range (0, {n},") == 1
+        # the dimension's broadcast subtree (a union of hot and cold
+        # domains) prints after the rollup's own operators
+        assert "Union" not in final.split("BroadcastQueryStage")[0]
+        assert final.count("Exchange hashpartitioning") == 2
+        assert "ReusedExchange" not in final
+
+
+def test_hll_rollup_matches_per_interval_fold(spark):
+    """distinct_mode='hll' on a distinct column with thousands of values per
+    1m group (the sketches are in HLL mode, not exact list/set mode): the
+    1m svc_distinct equals the 1m base sketch's own estimate, and each
+    coarser interval's equals a separate per-interval re-aggregation of the
+    1m sketches."""
+    n, span_s = 120_000, 1200  # 20 minutes across a 10m boundary, 2 sinks
+    rows = spark.range(n).select(
+        F.timestamp_seconds(F.lit(1_767_225_300) + F.col("id") % span_s).alias("warc_ts"),
+        (F.col("id") % 2).cast("string").alias("sink"),
+        F.concat(F.lit("svc-"), F.col("id").cast("string")).alias("svc"),
+        F.lit(1).cast("long").alias("dur_us"),
+        F.lit(1).cast("long").alias("success_count"),
+        F.lit(0).cast("long").alias("failure_count"),
+    )
+    keys = ["sink"]
+    out = interval_rollup_union(rows, keys=keys, distinct_mode="hll")
+    got = {
+        (r["metricset_interval"], r["window_start"], r["sink"]): r["svc_distinct"]
+        for r in out.collect()
+    }
+    base = aggregate_base_interval(rows, keys, distinct_mode="hll")
+    want = {
+        ("1m", r["window_start"], r["sink"]): r["est"]
+        for r in base.select("window_start", *keys, F.hll_sketch_estimate("_svc_hll").alias("est")).collect()
+    }
+    # every 1m group holds 3,000 distinct values; HLL mode estimates them
+    assert len(want) == 40 and any(v != n // 40 for v in want.values())
+    for ivl in ("10m", "60m"):
+        per_ivl = base.groupBy(
+            trunc_to_interval(F.col("window_start"), ivl).alias("w"), *keys
+        ).agg(F.hll_sketch_estimate(F.hll_union_agg("_svc_hll")).alias("est"))
+        for r in per_ivl.collect():
+            want[(ivl, r["w"], r["sink"])] = r["est"]
+    assert got == want
 
 
 def test_totals_conserved(spark):

@@ -267,10 +267,35 @@ def test_scoped_intermediates_unpersists(spark, sf_dir, op):
     entry = persistent().size()
     with scoped_intermediates():
         build().collect()
-        # the rollup's branches share the base through exchange reuse; every
-        # other operator caches at least one intermediate
+        # the rollup caches nothing; every other operator caches at least
+        # one intermediate
         assert (persistent().size() > entry) == (op != "interval_rollup_union")
     assert persistent().size() == entry
+
+
+def test_maybe_persist_leaves_outside_cache_alone(spark):
+    """A plan cached outside a scope stays cached after ``maybe_persist`` of
+    the same plan inside the scope exits: Spark's cache is keyed by plan,
+    and a scope releases only the entries it created."""
+    from pyspark import StorageLevel
+
+    from opentelemetry_collector_components_spark.caching import (
+        maybe_persist,
+        scoped_intermediates,
+    )
+
+    def plan():
+        return spark.range(37).selectExpr("id * 3 AS x37")
+
+    outer = plan().cache()
+    try:
+        outer.count()
+        with scoped_intermediates() as handles:
+            assert maybe_persist(plan()).count() == 37
+            assert handles == []
+        assert outer.storageLevel != StorageLevel.NONE
+    finally:
+        outer.unpersist()
 
 
 def test_pack_sequences_persist_input_same_output(spark):
