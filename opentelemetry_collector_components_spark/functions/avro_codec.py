@@ -6,9 +6,9 @@ The interchange format half the data-lake ecosystem ships history in
 collector that can only read parquet leaves those sources stranded.
 Implemented from the public spec like the repo's other wire codecs
 (snappy_codec.py, protowire.py, msgpack_codec.py) — no avro package in
-the container, and the decode hot path runs Arrow-batched inside
-mapInPandas, so a compact schema-driven Python codec is the right
-shape.
+the container, and the decode hot path runs per body inside
+``mapInArrow`` (``sources/decoders.py::decode_bodies``), so a compact
+schema-driven Python codec is the right shape.
 
 Coverage:
 

@@ -4,7 +4,8 @@ The IETF's standard binary JSON (COSE, CWT, WebAuthn payloads, CoAP /
 IoT telemetry — the low-power cousin of the fluentd-msgpack world this
 repo already decodes).  Implemented from the public RFC like the other
 wire codecs (``msgpack_codec.py``, ``protowire.py``): no cbor package in
-the container; the decode hot path runs Arrow-batched inside mapInPandas.
+the container; the decode hot path runs per body inside ``mapInArrow``
+(``sources/decoders.py::decode_bodies``).
 
 Wire model (RFC 8949 §3): one initial byte = (major type << 5) | short
 count; counts 0..23 inline, 24/25/26/27 = 1/2/4/8-byte big-endian

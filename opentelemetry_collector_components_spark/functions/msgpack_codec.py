@@ -6,7 +6,8 @@ protobuf+snappy, syslog, GELF, CEF, statsd, prometheus text, logfmt,
 beats csv/json/text are already in).  Implemented from the public spec
 like the repo's other codecs (snappy_codec.py, protowire.py,
 media_codec.py): no third-party msgpack package in the container, and
-the hot path runs Arrow-batched inside mapInPandas, so a compact
+the hot path runs per body inside ``mapInArrow``
+(``sources/decoders.py::decode_bodies``), so a compact
 bytes-in/objects-out Python codec is the right shape.
 
 Coverage: nil, booleans, all int widths (fixint, uint8-64, int8-64),

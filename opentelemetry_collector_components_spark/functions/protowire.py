@@ -282,21 +282,6 @@ def encode_otlp_logs_request(
     return _envelope(resource_attrs, scope_name, recs)
 
 
-def _skip(buf: bytes, pos: int, wire: int) -> int:
-    if wire == 0:
-        _, pos = decode_varint(buf, pos)
-    elif wire == 1:
-        pos += 8
-    elif wire == 2:
-        ln, pos = decode_varint(buf, pos)
-        pos += ln
-    elif wire == 5:
-        pos += 4
-    else:
-        raise ValueError(f"unsupported wire type {wire}")
-    return pos
-
-
 def _parse_fields(buf: bytes):
     pos = 0
     while pos < len(buf):

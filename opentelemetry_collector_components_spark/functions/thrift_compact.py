@@ -4,8 +4,8 @@ The wire framing under Jaeger's classic trace transport (public specs:
 Apache Thrift compact protocol + jaegertracing/jaeger-idl
 ``jaeger.thrift``).  Implemented from the spec like the repo's other
 binary codecs (protowire.py, msgpack_codec.py, avro_codec.py): no
-thrift package in the container, and the decode hot path runs inside
-Arrow-batched ``mapInPandas``.
+thrift package in the container, and the decode hot path runs per body
+inside ``mapInArrow`` (``sources/decoders.py::decode_bodies``).
 
 Wire rules (compact protocol spec):
 

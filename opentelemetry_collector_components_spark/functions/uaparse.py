@@ -18,7 +18,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType, StructField, StructType
@@ -62,10 +62,6 @@ _UA_TYPE = StructType(
 def parse_user_agent(ua: pd.Series) -> pd.DataFrame:
     parsed = [_parse_one(u) for u in ua]
     return pd.DataFrame(parsed, columns=["name", "version"])
-
-
-def ua_family(ua: Column) -> Column:
-    return parse_user_agent(ua)["name"]
 
 
 def enrich_user_agent(df: DataFrame, ua_col: str = "user_agent_original") -> DataFrame:

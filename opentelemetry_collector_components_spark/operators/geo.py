@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
@@ -129,15 +129,3 @@ def geohash_sql(lat_expr: str, lon_expr: str, precision: int = 7) -> str:
         for k in range(precision)
     ]
     return " || ".join(chars)
-
-
-def with_geohash(
-    df: DataFrame,
-    lat_col: str,
-    lon_col: str,
-    precision: int = 7,
-    out_col: str = "geohash",
-) -> DataFrame:
-    return df.withColumn(
-        out_col, geohash(F.col(lat_col), F.col(lon_col), precision)
-    )

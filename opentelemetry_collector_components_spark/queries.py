@@ -17975,7 +17975,7 @@ def q_streaming_otlp_protobuf_intake(spark: SparkSession, sf: str) -> DataFrame:
     protobuf round trips in the wire section).  The shared closed-form
     log corpus is projected off a readStream, each record rides its
     own binary ExportLogsServiceRequest body (per-row receiver shape,
-    mapInArrow encode -> mapInPandas decode, both stateless and thus
+    mapInArrow encode -> mapInArrow decode, both stateless and thus
     streaming-legal), and a complete-mode aggregate drains to memory.
     The oracle recomputes count + severity sum from the closed form,
     so a wire defect in either codec direction under the streaming
@@ -18084,8 +18084,8 @@ def q_text_segment_lang_profile(spark: SparkSession, sf: str) -> DataFrame:
 def q_otlp_protobuf_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """OTLP logs over the PRIMARY (protobuf) wire: the same closed-form
     records as otlp_log_roundtrip ride the pure-Python proto codec
-    (functions/protowire.py, Arrow-batched mapInPandas both ways —
-    the PRW transport pattern) and must land on the identical flat
+    (functions/protowire.py, mapInArrow both ways — the PRW
+    transport pattern) and must land on the identical flat
     rows; the oracle is the same closed form, so a wire defect in
     EITHER codec direction breaks the hash.  fixed64 timestamps,
     varint severities, bytes ids, nested KeyValue/AnyValue — all

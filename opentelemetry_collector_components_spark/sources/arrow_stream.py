@@ -1,9 +1,9 @@
 """Arrow IPC stream intake — blobs in, typed rows out.
 
 Distributed wrapper over ``functions/arrow_ipc.py``: IPC stream blobs
-(Flight dumps, Feather payloads, cross-process handoffs) decode
-Arrow-batched inside mapInPandas, same shape as the Avro OCF and PRW
-intakes.  The fixture generator renders events per shard with pyarrow
+(Flight dumps, Feather payloads, cross-process handoffs) decode per blob
+through ``sources/decoders.py::decode_bodies``, same shape as the Avro
+OCF and PRW intakes.  The fixture generator renders events per shard with pyarrow
 (the ubiquitous writer — the pure-Python DECODER is the artifact under
 test, cross-validated against it by construction)."""
 
@@ -13,6 +13,8 @@ import struct
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .decoders import decode_bodies
 
 
 def generate_arrow_streams(events: DataFrame, shards: int = 8) -> DataFrame:
@@ -67,46 +69,27 @@ def generate_arrow_streams(events: DataFrame, shards: int = 8) -> DataFrame:
 def decode_arrow_streams(df: DataFrame, body_col: str = "body") -> DataFrame:
     """IPC blobs -> ``(eid, etype, vm, val, ts_us, valid)``; a torn or
     unsupported blob yields one valid=false row (intake leniency
-    contract)."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType, DoubleType, LongType, StringType, StructField, StructType,
-    )
-
+    contract); a NULL blob yields no rows."""
     from ..functions.arrow_ipc import decode_arrow_stream
 
-    schema = StructType(
-        [
-            StructField("eid", LongType()),
-            StructField("etype", StringType()),
-            StructField("vm", LongType()),
-            StructField("val", DoubleType()),
-            StructField("ts_us", LongType()),
-            StructField("valid", BooleanType()),
-        ]
+    def _records(body: bytes):
+        d = decode_arrow_stream(body)
+        for i in range(len(d["eid"])):
+            yield {
+                "eid": d["eid"][i],
+                "etype": d["etype"][i],
+                "vm": d["vm"][i],
+                "val": d["val"][i],
+                "ts_us": d["ts_us"][i],
+                "valid": True,
+            }
+
+    return decode_bodies(
+        df,
+        body_col,
+        "eid long, etype string, vm long, val double, ts_us long, "
+        "valid boolean",
+        _records,
+        (ValueError, TypeError, KeyError, IndexError, AttributeError,
+         struct.error, UnicodeDecodeError),
     )
-    cols = [f.name for f in schema.fields]
-
-    def _decode(batches):
-        for pdf in batches:
-            rows = []
-            for body in pdf[body_col]:
-                try:
-                    d = decode_arrow_stream(bytes(body))
-                    for i in range(len(d["eid"])):
-                        rows.append(
-                            {
-                                "eid": d["eid"][i],
-                                "etype": d["etype"][i],
-                                "vm": d["vm"][i],
-                                "val": d["val"][i],
-                                "ts_us": d["ts_us"][i],
-                                "valid": True,
-                            }
-                        )
-                except (ValueError, TypeError, KeyError, IndexError,
-                        AttributeError, struct.error, UnicodeDecodeError):
-                    rows.append(dict.fromkeys(cols, None) | {"valid": False})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(body_col).mapInPandas(_decode, schema=schema)

@@ -8,10 +8,11 @@ the sync-framed blocks, inflate deflate payloads, and type the records
 
 Scale shape mirrors the GELF/forward generators and the PRW decoder:
 encode packs each shard's records into ONE container blob inside an
-applyInPandas task (shards bound group size); decode is Arrow-batched
-mapInPandas over body bytes — embarrassingly parallel, no shuffle
-after the scan, undecodable blobs surface as ``valid = false`` rows
-(the repo-wide intake contract).
+applyInPandas task (shards bound group size); decode runs per body
+through ``sources/decoders.py::decode_bodies`` — embarrassingly
+parallel, no shuffle after the scan, undecodable blobs surface as
+``valid = false`` rows and NULL bodies yield no rows (the repo-wide
+intake contract).
 """
 
 from __future__ import annotations
@@ -22,6 +23,8 @@ import zlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .decoders import decode_bodies
 
 EVENT_SCHEMA = {
     "type": "record",
@@ -105,52 +108,30 @@ def decode_avro_containers(df: DataFrame, body_col: str = "body") -> DataFrame:
     travels IN the header — this reader requires the Event shape above
     (same single-schema contract as the PRW/OTLP decoders); a blob that
     fails to parse yields one ``valid = false`` row."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType, LongType, MapType, StringType, StructField, StructType,
-    )
-
     from ..functions.avro_codec import read_container
 
-    schema = StructType(
-        [
-            StructField("eid", LongType()),
-            StructField("uid", LongType()),
-            StructField("etype", StringType()),
-            StructField("vm", LongType()),
-            StructField("knum", LongType()),
-            StructField("tags", MapType(StringType(), StringType())),
-            StructField("valid", BooleanType()),
-        ]
+    def _records(body: bytes):
+        _, recs = read_container(body)
+        for r in recs:
+            yield {
+                "eid": r["eid"],
+                "uid": r["uid"],
+                "etype": r["etype"],
+                "vm": r["vm"],
+                "knum": r["knum"],
+                "tags": r["tags"],
+                "valid": True,
+            }
+
+    return decode_bodies(
+        df,
+        body_col,
+        "eid long, uid long, etype string, vm long, knum long, "
+        "tags map<string, string>, valid boolean",
+        _records,
+        (ValueError, TypeError, KeyError, IndexError, struct.error,
+         zlib.error, EOFError),
     )
-    cols = [f.name for f in schema.fields]
-
-    def _decode(batches):
-        for pdf in batches:
-            rows = []
-            for body in pdf[body_col]:
-                if body is None:
-                    continue
-                try:
-                    _, recs = read_container(bytes(body))
-                    for r in recs:
-                        rows.append(
-                            {
-                                "eid": r["eid"],
-                                "uid": r["uid"],
-                                "etype": r["etype"],
-                                "vm": r["vm"],
-                                "knum": r["knum"],
-                                "tags": r["tags"],
-                                "valid": True,
-                            }
-                        )
-                except (ValueError, TypeError, KeyError, IndexError,
-                        struct.error, zlib.error, EOFError):
-                    rows.append(dict.fromkeys(cols[:-1]) | {"valid": False})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(body_col).mapInPandas(_decode, schema=schema)
 
 
 READER_SCHEMA_V2 = {
@@ -186,41 +167,24 @@ def decode_avro_containers_resolved(
     record.  Emits ``(eid, etype, vm, knum, region, valid)``; a torn or
     irresolvable blob yields one valid=false row (same leniency contract
     as decode_avro_containers)."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType, DoubleType, LongType, StringType, StructField, StructType,
-    )
-
     from ..functions.avro_codec import read_container_resolved
 
     reader = reader_schema or READER_SCHEMA_V2
-    schema = StructType(
-        [
-            StructField("eid", LongType()),
-            StructField("etype", StringType()),
-            StructField("vm", DoubleType()),
-            StructField("knum", LongType()),
-            StructField("region", StringType()),
-            StructField("valid", BooleanType()),
-        ]
+
+    def _records(body: bytes):
+        _, recs = read_container_resolved(body, reader)
+        for r in recs:
+            yield r | {"valid": True}
+
+    return decode_bodies(
+        df,
+        body_col,
+        "eid long, etype string, vm double, knum long, region string, "
+        "valid boolean",
+        _records,
+        (ValueError, TypeError, KeyError, IndexError, struct.error,
+         UnicodeDecodeError, zlib.error),
     )
-    cols = [f.name for f in schema.fields]
-
-    def _decode(batches):
-        for pdf in batches:
-            rows = []
-            for body in pdf[body_col]:
-                try:
-                    _, recs = read_container_resolved(bytes(body), reader)
-                    for r in recs:
-                        rows.append({**{c: r.get(c) for c in cols[:-1]},
-                                     "valid": True})
-                except (ValueError, TypeError, KeyError, IndexError,
-                        struct.error, UnicodeDecodeError, zlib.error):
-                    rows.append(dict.fromkeys(cols, None) | {"valid": False})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(body_col).mapInPandas(_decode, schema=schema)
 
 
 def decode_confluent_frames(
@@ -240,23 +204,9 @@ def decode_confluent_frames(
     Emits ``(schema_id, record map<string,string>, valid)`` — values
     stringified for schema-genericity (the forward-protocol contract);
     bad magic, unknown ids, or torn payloads yield valid=false rows."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType, IntegerType, MapType, StringType, StructField, StructType,
-    )
-
     from ..functions.avro_codec import decode_value, resolve_read
 
-    schema = StructType(
-        [
-            StructField("schema_id", IntegerType()),
-            StructField("record", MapType(StringType(), StringType())),
-            StructField("valid", BooleanType()),
-        ]
-    )
-    cols = [f.name for f in schema.fields]
-
-    def _one(body: bytes) -> dict:
+    def _frame(body: bytes) -> list[dict]:
         if len(body) < 5 or body[0] != 0:
             raise ValueError("bad confluent magic byte")
         sid = int.from_bytes(body[1:5], "big")
@@ -271,23 +221,21 @@ def decode_confluent_frames(
             raise ValueError("trailing bytes after avro record")
         if not isinstance(rec, dict):  # a registry may hold non-record
             raise ValueError("confluent frame schema is not a record")
-        return {
-            "schema_id": sid,
-            "record": {
-                k: None if v is None else str(v) for k, v in rec.items()
-            },
-            "valid": True,
-        }
+        return [
+            {
+                "schema_id": sid,
+                "record": {
+                    k: None if v is None else str(v) for k, v in rec.items()
+                },
+                "valid": True,
+            }
+        ]
 
-    def _decode(batches):
-        for pdf in batches:
-            rows = []
-            for body in pdf[body_col]:
-                try:
-                    rows.append(_one(bytes(body)))
-                except (ValueError, TypeError, KeyError, IndexError,
-                        AttributeError, struct.error, UnicodeDecodeError):
-                    rows.append(dict.fromkeys(cols, None) | {"valid": False})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(body_col).mapInPandas(_decode, schema=schema)
+    return decode_bodies(
+        df,
+        body_col,
+        "schema_id int, record map<string, string>, valid boolean",
+        _frame,
+        (ValueError, TypeError, KeyError, IndexError, AttributeError,
+         struct.error, UnicodeDecodeError),
+    )

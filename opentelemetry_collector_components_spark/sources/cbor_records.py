@@ -2,10 +2,11 @@
 
 Distributed wrapper over ``functions/cbor_codec.py``: shards of
 back-to-back CBOR items (the CoAP/IoT and COSE-adjacent wire this codec
-exists for) decode Arrow-batched inside mapInPandas, the same intake
-shape as the msgpack-forward and Avro OCF sources.  The fixture
-generator renders events with the repo's own canonical encoder and the
-decoder walks them back — both directions of the codec under one gate,
+exists for) decode per blob through
+``sources/decoders.py::decode_bodies``, the same intake shape as the
+msgpack-forward and Avro OCF sources.  The fixture generator renders
+events with the repo's own canonical encoder and the decoder walks them
+back — both directions of the codec under one gate,
 with epoch timestamps carried as tag 1 (RFC 8949 §3.4.2)."""
 
 from __future__ import annotations
@@ -14,6 +15,8 @@ import struct
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .decoders import decode_bodies
 
 
 def generate_cbor_bodies(events: DataFrame, shards: int = 8) -> DataFrame:
@@ -67,55 +70,37 @@ def generate_cbor_bodies(events: DataFrame, shards: int = 8) -> DataFrame:
 
 def decode_cbor_bodies(df: DataFrame, body_col: str = "body") -> DataFrame:
     """CBOR item streams -> ``(eid, etype, v, epoch, k_sum, uid, valid)``;
-    a malformed stream yields one valid=false row for its blob."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType, DoubleType, LongType, StringType, StructField, StructType,
-    )
-
+    a malformed stream yields one valid=false row for its blob (and
+    none of the records before the tear); a NULL blob yields no rows."""
     from ..functions.cbor_codec import Tag, decode_prefix
 
-    schema = StructType(
-        [
-            StructField("eid", LongType()),
-            StructField("etype", StringType()),
-            StructField("v", DoubleType()),
-            StructField("epoch", LongType()),
-            StructField("k_sum", LongType()),
-            StructField("uid", LongType()),
-            StructField("valid", BooleanType()),
-        ]
+    def _records(buf: bytes) -> list[dict]:
+        pos = 0
+        rows = []
+        while pos < len(buf):
+            rec, pos = decode_prefix(buf, pos)
+            ts = rec["ts"]
+            if not (isinstance(ts, Tag) and ts.tag == 1):
+                raise ValueError("ts must be an epoch tag 1")
+            rows.append(
+                {
+                    "eid": rec["eid"],
+                    "etype": rec["type"],
+                    "v": rec["v"],
+                    "epoch": ts.value,
+                    "k_sum": sum(rec["ks"]),
+                    "uid": rec["m"]["u"],
+                    "valid": True,
+                }
+            )
+        return rows
+
+    return decode_bodies(
+        df,
+        body_col,
+        "eid long, etype string, v double, epoch long, k_sum long, "
+        "uid long, valid boolean",
+        _records,
+        (ValueError, TypeError, KeyError, IndexError, struct.error,
+         UnicodeDecodeError),
     )
-    cols = [f.name for f in schema.fields]
-
-    def _decode(batches):
-        for pdf in batches:
-            rows = []
-            for body in pdf[body_col]:
-                try:
-                    buf = bytes(body)
-                    pos = 0
-                    blob_rows = []
-                    while pos < len(buf):
-                        rec, pos = decode_prefix(buf, pos)
-                        ts = rec["ts"]
-                        if not (isinstance(ts, Tag) and ts.tag == 1):
-                            raise ValueError("ts must be an epoch tag 1")
-                        blob_rows.append(
-                            {
-                                "eid": rec["eid"],
-                                "etype": rec["type"],
-                                "v": rec["v"],
-                                "epoch": ts.value,
-                                "k_sum": sum(rec["ks"]),
-                                "uid": rec["m"]["u"],
-                                "valid": True,
-                            }
-                        )
-                    rows.extend(blob_rows)
-                except (ValueError, TypeError, KeyError, IndexError,
-                        struct.error, UnicodeDecodeError):
-                    rows.append(dict.fromkeys(cols, None) | {"valid": False})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(body_col).mapInPandas(_decode, schema=schema)

@@ -14,6 +14,10 @@ ndjsondecoder/stream.go:97-300, detectEventType stream.go:907).
 Spark-first: all four are column expressions over a lines DataFrame —
 ``from_json`` / ``from_csv`` / ``split`` stay in the JVM; there is no
 hand-rolled byte scanner because the scan IS the source.
+
+``decode_bodies`` is the one transport every binary-body wire decoder in
+``sources/`` runs its pure-Python codec through (``mapInArrow``, Arrow
+batches built from the codec's row dicts).
 """
 
 from __future__ import annotations
@@ -76,15 +80,6 @@ def decode_csv(
 # --- NDJSON intake (S1/S2) --------------------------------------------------
 
 EVENT_TYPES = ["transaction", "span", "error", "log", "metricset"]
-
-
-def detect_event_type(json_col: Column) -> Column:
-    """First matching top-level key wins (detectEventType, stream.go:907)."""
-    out = None
-    for et in EVENT_TYPES:
-        cond = F.get_json_object(json_col, f"$.{et}").isNotNull()
-        out = F.when(cond, F.lit(et)) if out is None else out.when(cond, F.lit(et))
-    return out.otherwise(F.lit("unknown"))
 
 
 def decode_ndjson_intake(lines: DataFrame, text_col: str = "value") -> DataFrame:
@@ -160,6 +155,58 @@ def prw_translate(
     )
 
 
+def decode_bodies(df: DataFrame, cols, schema, decode, errors=()) -> DataFrame:
+    """The one transport from binary bodies to codec rows: ``mapInArrow``
+    over ``df.select(*cols)``, one ``decode(*values)`` call per input row
+    (``cols`` is a name or a list of names; the LAST is the body).
+
+    - A NULL body is skipped: it yields no rows.
+    - ``decode`` returns or yields row dicts keyed by ``schema`` field
+      names; a missing key is NULL, an extra key is ignored.
+    - When ``decode`` raises one of ``errors``, the body adds one row that
+      is all NULL except ``valid = false``.  A list return is all or
+      nothing; the rows a generator yielded before it raised are kept.
+    - Any other exception fails the task.
+
+    Rows cross into Spark through ``pa.RecordBatch.from_pylist`` against
+    the Arrow form of ``schema`` (a ``StructType`` or DDL string), never
+    through a pandas frame: pandas infers float64 for an int64 column
+    that holds a NULL and rounds values above 2^53."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    cols = [cols] if isinstance(cols, str) else list(cols)
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    invalid = {"valid": False}
+
+    def _decode(batches):
+        for batch in batches:
+            rows: list = []
+            for values in zip(*(batch.column(c).to_pylist() for c in cols)):
+                if values[-1] is None:
+                    continue
+                try:
+                    rows.extend(decode(*values))
+                except errors:
+                    rows.append(invalid)
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+
+    return df.select(*cols).mapInArrow(_decode, schema)
+
+
+_PRW_SAMPLES = "samples array<struct<value: double, ts_ms: long>>"
+
+
+def _prw_series(ts: dict) -> dict:
+    return {
+        "labels": ts["labels"],
+        "samples": [{"value": v, "ts_ms": t} for v, t in ts["samples"]],
+    }
+
+
 def decode_prw_write_request(df: DataFrame, body_col: str = "body") -> DataFrame:
     """Snappy-compressed prompb.WriteRequest bodies -> the post-protobuf
     series shape ``prw_translate`` consumes (labels map + samples array).
@@ -167,52 +214,20 @@ def decode_prw_write_request(df: DataFrame, body_col: str = "body") -> DataFrame
     Closes the transport step of S5 (receiver.go:31-80: the handler snappy-
     decompresses then proto-unmarshals before translation) with the pure-
     Python codecs in ``functions/snappy_codec.py`` / ``functions/
-    protowire.py``, run per body inside Arrow-batched ``mapInPandas`` — one
-    output row per timeseries."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, LongType, MapType, StringType, StructField,
-        StructType,
-    )
-
+    protowire.py``, run per body through ``decode_bodies`` — one output
+    row per timeseries."""
     from ..functions.protowire import decode_write_request
     from ..functions.snappy_codec import snappy_decompress
 
-    schema = StructType(
-        [
-            StructField("labels", MapType(StringType(), StringType())),
-            StructField(
-                "samples",
-                ArrayType(
-                    StructType(
-                        [
-                            StructField("value", DoubleType()),
-                            StructField("ts_ms", LongType()),
-                        ]
-                    )
-                ),
-            ),
+    def _decode(body: bytes) -> list[dict]:
+        return [
+            _prw_series(ts)
+            for ts in decode_write_request(snappy_decompress(body))
         ]
+
+    return decode_bodies(
+        df, body_col, f"labels map<string, string>, {_PRW_SAMPLES}", _decode
     )
-
-    def _decode(batches):
-        for pdf in batches:
-            rows = []
-            for body in pdf[body_col]:
-                if body is None:
-                    continue
-                for ts in decode_write_request(snappy_decompress(bytes(body))):
-                    rows.append(
-                        {
-                            "labels": ts["labels"],
-                            "samples": [
-                                {"value": v, "ts_ms": t} for v, t in ts["samples"]
-                            ],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["labels", "samples"])
-
-    return df.select(body_col).mapInPandas(_decode, schema=schema)
 
 
 def generate_prw_bodies(spark, n: int = 2000) -> DataFrame:
@@ -525,18 +540,22 @@ def decode_cef(
 
 def _map_body_col(df: DataFrame, body_col: str, fn) -> DataFrame:
     """Apply a bytes->bytes codec to one binary column in place (schema
-    unchanged, NULLs pass through); Arrow-batched ``mapInPandas``."""
-    cols = df.columns
+    unchanged, NULLs pass through); ``mapInArrow``, so the other columns
+    pass through as Arrow arrays (never a pandas frame that would turn a
+    nullable int64 into float64)."""
+    import pyarrow as pa
 
     def _apply(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[body_col] = [
-                None if b is None else fn(bytes(b)) for b in pdf[body_col]
-            ]
-            yield pdf[cols]
+        for batch in batches:
+            i = batch.schema.get_field_index(body_col)
+            body = pa.array(
+                [None if b is None else fn(b)
+                 for b in batch.column(i).to_pylist()],
+                type=batch.schema.field(i).type,
+            )
+            yield batch.set_column(i, batch.schema.field(i), body)
 
-    return df.mapInPandas(_apply, schema=df.schema)
+    return df.mapInArrow(_apply, schema=df.schema)
 
 
 def lz4_pack_bodies(df: DataFrame, body_col: str = "body") -> DataFrame:
@@ -563,63 +582,32 @@ def decode_prw_write_request_v2(df: DataFrame, body_col: str = "body") -> DataFr
     io.prometheus.write.v2.Request (symbol table + labels_refs, see
     functions/protowire.py) -> one row per timeseries with the v1 shape
     (labels map + samples array) PLUS the v2 metadata columns
-    ``meta_type`` (enum long), ``unit``, ``help``.  Same Arrow-batched
-    mapInPandas shape as the v1 decoder above."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, LongType, MapType, StringType, StructField,
-        StructType,
-    )
-
+    ``meta_type`` (enum long), ``unit``, ``help``.  Same
+    ``decode_bodies`` transport as the v1 decoder above."""
     from ..functions.protowire import decode_write_request_v2
     from ..functions.snappy_codec import snappy_decompress
 
-    schema = StructType(
-        [
-            StructField("labels", MapType(StringType(), StringType())),
-            StructField(
-                "samples",
-                ArrayType(
-                    StructType(
-                        [
-                            StructField("value", DoubleType()),
-                            StructField("ts_ms", LongType()),
-                        ]
-                    )
-                ),
-            ),
-            StructField("meta_type", LongType()),
-            StructField("unit", StringType()),
-            StructField("help", StringType()),
-        ]
-    )
-
-    def _decode(batches):
-        for pdf in batches:
-            rows = []
-            for body in pdf[body_col]:
-                if body is None:
-                    continue
-                for ts in decode_write_request_v2(
-                    snappy_decompress(bytes(body))
-                ):
-                    md = ts["metadata"]
-                    rows.append(
-                        {
-                            "labels": ts["labels"],
-                            "samples": [
-                                {"value": v, "ts_ms": t} for v, t in ts["samples"]
-                            ],
-                            "meta_type": md.get("type"),
-                            "unit": md.get("unit"),
-                            "help": md.get("help"),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["labels", "samples", "meta_type", "unit", "help"]
+    def _decode(body: bytes) -> list[dict]:
+        rows = []
+        for ts in decode_write_request_v2(snappy_decompress(body)):
+            md = ts["metadata"]
+            rows.append(
+                _prw_series(ts)
+                | {
+                    "meta_type": md.get("type"),
+                    "unit": md.get("unit"),
+                    "help": md.get("help"),
+                }
             )
+        return rows
 
-    return df.select(body_col).mapInPandas(_decode, schema=schema)
+    return decode_bodies(
+        df,
+        body_col,
+        f"labels map<string, string>, {_PRW_SAMPLES}, meta_type long, "
+        "unit string, help string",
+        _decode,
+    )
 
 
 def generate_prw_v2_bodies(spark, n: int = 2000) -> DataFrame:

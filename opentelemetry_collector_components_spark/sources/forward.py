@@ -24,8 +24,9 @@ unpack yields one row with ``valid = false`` and NULL fields.
 
 Scale shape: encode packs each (tag, shard) group in one applyInPandas
 task — shards bound group size, the same contract as the GELF chunk
-generator; decode is Arrow-batched mapInPandas, one task per batch of
-bodies, embarrassingly parallel, no shuffle after the scan.
+generator; decode runs per body through
+``sources/decoders.py::decode_bodies`` (Arrow batches in, Arrow batches
+out), embarrassingly parallel, no shuffle after the scan.
 """
 
 from __future__ import annotations
@@ -35,6 +36,8 @@ import zlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .decoders import decode_bodies
 
 
 def generate_forward_messages(events: DataFrame, shards: int = 6) -> DataFrame:
@@ -97,70 +100,40 @@ def decode_forward(df: DataFrame, body_col: str = "body") -> DataFrame:
     Forward, bin → PackedForward, gunzip first when the option map
     says ``compressed: gzip``).  A body that fails to unpack yields
     one ``valid = false`` row with NULL fields."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType, LongType, MapType, StringType, StructField, StructType,
-    )
-
     from ..functions.msgpack_codec import Ext, ext_to_time, unpack, unpack_stream
 
-    schema = StructType(
-        [
-            StructField("tag", StringType()),
-            StructField("time_s", LongType()),
-            StructField("time_ns", LongType()),
-            StructField("record", MapType(StringType(), StringType())),
-            StructField("valid", BooleanType()),
-        ]
+    def _entries(body: bytes):
+        msg = unpack(body)
+        tag, payload = msg[0], msg[1]
+        option = msg[2] if len(msg) > 2 else None
+        if option is not None and not isinstance(option, dict):
+            raise ValueError("forward option must be a map")
+        if isinstance(payload, bytes):
+            if option and option.get("compressed") == "gzip":
+                payload = gzip.decompress(payload)
+            entries = unpack_stream(payload)
+        else:
+            entries = payload
+        for t, rec in entries:
+            if isinstance(t, Ext):
+                sec, nsec = ext_to_time(t)
+            else:
+                sec, nsec = int(t), 0
+            yield {
+                "tag": tag,
+                "time_s": sec,
+                "time_ns": nsec,
+                # records carry arbitrary scalars (the normal fluentd log
+                # has a string "message") — stringify, never int()
+                "record": {str(k): str(v) for k, v in rec.items()},
+                "valid": True,
+            }
+
+    return decode_bodies(
+        df,
+        body_col,
+        "tag string, time_s long, time_ns long, "
+        "record map<string, string>, valid boolean",
+        _entries,
+        (ValueError, TypeError, IndexError, OSError, EOFError, zlib.error),
     )
-    cols = [f.name for f in schema.fields]
-
-    def _decode(batches):
-        for pdf in batches:
-            rows = []
-            for body in pdf[body_col]:
-                if body is None:
-                    continue
-                try:
-                    msg = unpack(bytes(body))
-                    tag, payload = msg[0], msg[1]
-                    option = msg[2] if len(msg) > 2 else None
-                    if option is not None and not isinstance(option, dict):
-                        raise ValueError("forward option must be a map")
-                    if isinstance(payload, bytes):
-                        if option and option.get("compressed") == "gzip":
-                            payload = gzip.decompress(payload)
-                        entries = unpack_stream(payload)
-                    else:
-                        entries = payload
-                    for t, rec in entries:
-                        if isinstance(t, Ext):
-                            sec, nsec = ext_to_time(t)
-                        else:
-                            sec, nsec = int(t), 0
-                        rows.append(
-                            {
-                                "tag": tag,
-                                "time_s": sec,
-                                "time_ns": nsec,
-                                # records carry arbitrary scalars (the
-                                # normal fluentd log has a string
-                                # "message") — stringify, never int()
-                                "record": {str(k): str(v) for k, v in rec.items()},
-                                "valid": True,
-                            }
-                        )
-                except (ValueError, TypeError, IndexError, OSError,
-                        EOFError, zlib.error):
-                    rows.append(
-                        {
-                            "tag": None,
-                            "time_s": None,
-                            "time_ns": None,
-                            "record": None,
-                            "valid": False,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(body_col).mapInPandas(_decode, schema=schema)

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .decoders import decode_bodies
+
 GELF_FIELDS_DDL = (
     "version string, host string, short_message string, "
     "timestamp double, level long, _facility string"
@@ -51,46 +53,24 @@ def decode_gelf_datagrams(df: DataFrame, body_col: str = "body") -> DataFrame:
     short_message, timestamp DOUBLE, level LONG, _facility STRING)."""
     import pandas as pd
 
-    header_schema = T.StructType(
-        [
-            T.StructField("message_id", T.StringType()),
-            T.StructField("seq", T.IntegerType()),
-            T.StructField("total", T.IntegerType()),
-            T.StructField("part", T.BinaryType()),
-            T.StructField("doc", T.StringType()),
-        ]
+    def split_headers(body: bytes) -> list[dict]:
+        if len(body) >= 12 and body[0] == 0x1E and body[1] == 0x0F:
+            return [
+                {
+                    "message_id": body[2:10].hex(),
+                    "seq": body[10],
+                    "total": body[11],
+                    "part": body[12:],
+                }
+            ]
+        return [{"doc": _inflate_doc(body)}]
+
+    headers = decode_bodies(
+        df,
+        body_col,
+        "message_id string, seq int, total int, part binary, doc string",
+        split_headers,
     )
-
-    def split_headers(batches):
-        for pdf in batches:
-            rows = []
-            for body in pdf[body_col]:
-                if body is None:
-                    continue
-                b = bytes(body)
-                if len(b) >= 12 and b[0] == 0x1E and b[1] == 0x0F:
-                    rows.append(
-                        {
-                            "message_id": b[2:10].hex(),
-                            "seq": b[10],
-                            "total": b[11],
-                            "part": b[12:],
-                            "doc": None,
-                        }
-                    )
-                else:
-                    rows.append(
-                        {
-                            "message_id": None,
-                            "seq": None,
-                            "total": None,
-                            "part": None,
-                            "doc": _inflate_doc(b),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in header_schema.fields])
-
-    headers = df.select(body_col).mapInPandas(split_headers, schema=header_schema)
 
     single = headers.where(F.col("message_id").isNull()).select(
         F.lit(None).cast("string").alias("message_id"),
@@ -122,6 +102,8 @@ def decode_gelf_datagrams(df: DataFrame, body_col: str = "body") -> DataFrame:
         ]
     )
 
+    # grouped rows (one per message id), not binary bodies: this pass
+    # stays outside decode_bodies
     def assemble(batches):
         for pdf in batches:
             out = []

@@ -24,7 +24,8 @@ beside the Delta log replay.
 
 Scale shape: the metadata doc is ONE small json (driver-parsed); the
 manifest list is decoded to a manifest-path frame; manifests decode
-Arrow-batched via a broadcast-joined blob lookup — entries never
+per blob through ``sources/decoders.py::decode_bodies`` after a
+broadcast-joined blob lookup — entries never
 collect to the driver.  The generator collects only the 4 manifest
 lengths (small-by-construction, same class as the PQ seeds).
 """
@@ -35,6 +36,8 @@ import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .decoders import decode_bodies
 
 MANIFEST_FILE_SCHEMA = {
     "type": "record",
@@ -78,8 +81,6 @@ def resolve_iceberg_snapshot(
     file_format, record_count, file_size_in_bytes, status,
     manifest_path)``.  ``blobs`` is the object-store stand-in:
     ``(path string, content binary)``."""
-    import pandas as pd
-
     from ..functions.avro_codec import read_container
 
     meta = json.loads(metadata_json)
@@ -89,57 +90,36 @@ def resolve_iceberg_snapshot(
         raise ValueError(f"snapshot {sid} not in metadata")
     ml_path = by_id[sid]["manifest-list"]
 
-    def _decode_ml(batches):
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                _, recs = read_container(bytes(content))
-                for r in recs:
-                    rows.append({"manifest_path": r["manifest_path"]})
-            yield pd.DataFrame(rows, columns=["manifest_path"])
+    def _manifest_paths(content: bytes) -> list[dict]:
+        _, recs = read_container(content)
+        return [{"manifest_path": r["manifest_path"]} for r in recs]
 
     ml_blob = blobs.where(F.col("path") == ml_path)
     if ml_blob.limit(1).count() == 0:
         # an EMPTY manifest list is a legal empty snapshot; a MISSING
         # blob is store corruption and must not read as "no files"
         raise ValueError(f"manifest list {ml_path} not found in store")
-    manifests = ml_blob.select("content").mapInPandas(
-        _decode_ml, schema="manifest_path string"
+    manifests = decode_bodies(
+        ml_blob, "content", "manifest_path string", _manifest_paths
     )
     manifest_blobs = blobs.join(
         F.broadcast(manifests.withColumnRenamed("manifest_path", "path")),
         "path",
     )
 
-    def _decode_manifest(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                _, recs = read_container(bytes(content))
-                for r in recs:
-                    df_ = r["data_file"]
-                    rows.append(
-                        {
-                            "file_path": df_["file_path"],
-                            "file_format": df_["file_format"],
-                            "record_count": df_["record_count"],
-                            "file_size_in_bytes": df_["file_size_in_bytes"],
-                            "status": r["status"],
-                            "manifest_path": path,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "file_path", "file_format", "record_count",
-                    "file_size_in_bytes", "status", "manifest_path",
-                ],
-            )
+    def _entries(path: str, content: bytes) -> list[dict]:
+        _, recs = read_container(content)
+        return [
+            r["data_file"] | {"status": r["status"], "manifest_path": path}
+            for r in recs
+        ]
 
-    entries = manifest_blobs.select("path", "content").mapInPandas(
-        _decode_manifest,
-        schema="file_path string, file_format string, record_count long, "
+    entries = decode_bodies(
+        manifest_blobs,
+        ["path", "content"],
+        "file_path string, file_format string, record_count long, "
         "file_size_in_bytes long, status int, manifest_path string",
+        _entries,
     )
     return entries.where(F.col("status") != 2)
 

@@ -23,8 +23,9 @@ mapping: 128-bit trace id = hex(traceIdHigh) ++ hex(traceIdLow)
 stringified by vType into the ``map<string,string>`` attribute model.
 
 Scale shape mirrors the forward/avro intakes: encode one Batch per
-(service, shard) group in applyInPandas; decode Arrow-batched in
-mapInPandas — undecodable batches yield one ``valid = false`` row.
+(service, shard) group in applyInPandas; decode per body through
+``sources/decoders.py::decode_bodies`` — undecodable batches yield one
+``valid = false`` row.
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.thrift_compact import FieldWriter, read_struct
+from .decoders import decode_bodies
 
 VT_STRING, VT_DOUBLE, VT_BOOL, VT_LONG, VT_BINARY = range(5)
 
@@ -137,75 +139,51 @@ def decode_jaeger_batches(df: DataFrame, body_col: str = "body") -> DataFrame:
     tags map<string,string>, valid)``.  parentSpanId 0 -> NULL;
     process-level tags fold into every span's map under a ``process.``
     prefix (the receiver's resource-attribute translation)."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType, LongType, MapType, StringType, StructField, StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("service", StringType()),
-            StructField("trace_id", StringType()),
-            StructField("span_id", StringType()),
-            StructField("parent_span_id", StringType()),
-            StructField("name", StringType()),
-            StructField("flags", LongType()),
-            StructField("start_us", LongType()),
-            StructField("dur_us", LongType()),
-            StructField("tags", MapType(StringType(), StringType())),
-            StructField("valid", BooleanType()),
-        ]
-    )
-    cols = [f.name for f in schema.fields]
     mask = (1 << 64) - 1
 
-    def _decode(batches):
-        for pdf in batches:
-            rows = []
-            for body in pdf[body_col]:
-                if body is None:
-                    continue
-                try:
-                    batch, pos = read_struct(bytes(body), 0)
-                    if pos != len(body):
-                        raise ValueError("trailing bytes after Batch")
-                    proc = batch.get(1, {})
-                    svc_raw = proc.get(1, b"")
-                    svc = (
-                        svc_raw.decode("utf-8")
-                        if isinstance(svc_raw, bytes)
-                        else str(svc_raw)
-                    )
-                    ptags = {
-                        "process." + t.get(1, b"").decode("utf-8"):
-                            _tag_value_str(t)
-                        for t in proc.get(2, [])
-                    }
-                    for s in batch.get(2, []):
-                        tags = dict(ptags)
-                        for t in s.get(10, []):
-                            tags[t.get(1, b"").decode("utf-8")] = _tag_value_str(t)
-                        parent = s.get(4, 0)
-                        rows.append(
-                            {
-                                "service": svc,
-                                "trace_id": f"{s.get(2, 0) & mask:016x}"
-                                f"{s.get(1, 0) & mask:016x}",
-                                "span_id": f"{s.get(3, 0) & mask:016x}",
-                                "parent_span_id": (
-                                    f"{parent & mask:016x}" if parent else None
-                                ),
-                                "name": s.get(5, b"").decode("utf-8"),
-                                "flags": s.get(7, 0),
-                                "start_us": s.get(8, 0),
-                                "dur_us": s.get(9, 0),
-                                "tags": tags,
-                                "valid": True,
-                            }
-                        )
-                except (ValueError, TypeError, KeyError, IndexError,
-                        AttributeError, UnicodeDecodeError):
-                    rows.append(dict.fromkeys(cols[:-1]) | {"valid": False})
-            yield pd.DataFrame(rows, columns=cols)
+    def _spans(body: bytes):
+        batch, pos = read_struct(body, 0)
+        if pos != len(body):
+            raise ValueError("trailing bytes after Batch")
+        proc = batch.get(1, {})
+        svc_raw = proc.get(1, b"")
+        svc = (
+            svc_raw.decode("utf-8")
+            if isinstance(svc_raw, bytes)
+            else str(svc_raw)
+        )
+        ptags = {
+            "process." + t.get(1, b"").decode("utf-8"): _tag_value_str(t)
+            for t in proc.get(2, [])
+        }
+        for s in batch.get(2, []):
+            tags = dict(ptags)
+            for t in s.get(10, []):
+                tags[t.get(1, b"").decode("utf-8")] = _tag_value_str(t)
+            parent = s.get(4, 0)
+            yield {
+                "service": svc,
+                "trace_id": f"{s.get(2, 0) & mask:016x}"
+                f"{s.get(1, 0) & mask:016x}",
+                "span_id": f"{s.get(3, 0) & mask:016x}",
+                "parent_span_id": (
+                    f"{parent & mask:016x}" if parent else None
+                ),
+                "name": s.get(5, b"").decode("utf-8"),
+                "flags": s.get(7, 0),
+                "start_us": s.get(8, 0),
+                "dur_us": s.get(9, 0),
+                "tags": tags,
+                "valid": True,
+            }
 
-    return df.select(body_col).mapInPandas(_decode, schema=schema)
+    return decode_bodies(
+        df,
+        body_col,
+        "service string, trace_id string, span_id string, "
+        "parent_span_id string, name string, flags long, start_us long, "
+        "dur_us long, tags map<string, string>, valid boolean",
+        _spans,
+        (ValueError, TypeError, KeyError, IndexError, AttributeError,
+         UnicodeDecodeError),
+    )

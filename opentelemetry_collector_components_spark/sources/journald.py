@@ -6,8 +6,9 @@ contains newlines/binary is serialized as ``NAME\\n`` + little-endian
 u64 size + raw bytes + ``\\n``.  This is what ``journalctl -o export``
 and systemd-journal-remote speak — the host-log sibling of the syslog
 and GELF intakes, with the one wrinkle the others lack: binary-safe
-values, which force a byte-walk (Arrow-batched mapInPandas, the msgpack
-pattern) instead of a line split.
+values, which force a byte-walk (per body through
+``sources/decoders.py::decode_bodies``, the msgpack pattern) instead of
+a line split.
 
 Decode is lenient per ENTRY: a semantically bad entry (missing
 timestamp, garbage numeric) costs one valid=false row and its neighbors
@@ -16,7 +17,7 @@ value, missing trailing newline) costs one valid=false row plus the
 unreachable remainder of that blob — binary sizes make resynchronization
 impossible, but every entry parsed before the tear still survives.
 Framing is strict within an entry: a size running past the blob is torn,
-never silently truncated.
+never silently truncated.  A NULL blob yields no rows.
 """
 
 from __future__ import annotations
@@ -25,6 +26,8 @@ import struct
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .decoders import decode_bodies
 
 
 def parse_export(blob: bytes) -> list[dict]:
@@ -77,24 +80,7 @@ def decode_journal_export(df: DataFrame, body_col: str = "body") -> DataFrame:
     """Export blobs -> ``(realtime_us, priority, hostname, message,
     msg_bytes, msg_was_binary, valid)``; a malformed blob yields one
     valid=false row."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType, IntegerType, LongType, StringType, StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("realtime_us", LongType()),
-            StructField("priority", IntegerType()),
-            StructField("hostname", StringType()),
-            StructField("message", StringType()),
-            StructField("msg_bytes", LongType()),
-            StructField("msg_was_binary", BooleanType()),
-            StructField("valid", BooleanType()),
-        ]
-    )
-    cols = [f.name for f in schema.fields]
+    bad = {"valid": False}
 
     def _one(e: dict) -> dict:
         msg = e.get("MESSAGE", b"")
@@ -108,33 +94,33 @@ def decode_journal_export(df: DataFrame, body_col: str = "body") -> DataFrame:
             "valid": True,
         }
 
-    def _decode(batches):
-        bad = dict.fromkeys(cols, None) | {"valid": False}
-        for pdf in batches:
-            rows = []
-            for body in pdf[body_col]:
-                it = iter_export(bytes(body))
-                # per-entry leniency: a bad ENTRY (missing timestamp,
-                # garbage numeric) costs one invalid row and neighbors
-                # survive; a framing TEAR costs one invalid row plus the
-                # unreachable remainder (binary sizes make resync
-                # impossible) — entries already yielded still survive
-                while True:
-                    try:
-                        e = next(it)
-                    except StopIteration:
-                        break
-                    except (ValueError, struct.error, UnicodeDecodeError):
-                        rows.append(dict(bad))
-                        break
-                    try:
-                        rows.append(_one(e))
-                    except (ValueError, TypeError, KeyError,
-                            UnicodeDecodeError):
-                        rows.append(dict(bad))
-            yield pd.DataFrame(rows, columns=cols)
+    def _entries(body: bytes):
+        it = iter_export(body)
+        # per-entry leniency: a bad ENTRY (missing timestamp, garbage
+        # numeric) costs one invalid row and neighbors survive; a framing
+        # TEAR costs one invalid row plus the unreachable remainder
+        # (binary sizes make resync impossible) — entries already yielded
+        # still survive
+        while True:
+            try:
+                e = next(it)
+            except StopIteration:
+                return
+            except (ValueError, struct.error, UnicodeDecodeError):
+                yield bad
+                return
+            try:
+                yield _one(e)
+            except (ValueError, TypeError, KeyError, UnicodeDecodeError):
+                yield bad
 
-    return df.select(body_col).mapInPandas(_decode, schema=schema)
+    return decode_bodies(
+        df,
+        body_col,
+        "realtime_us long, priority int, hostname string, message string, "
+        "msg_bytes long, msg_was_binary boolean, valid boolean",
+        _entries,
+    )
 
 
 def generate_journal_export(events: DataFrame, shards: int = 8) -> DataFrame:

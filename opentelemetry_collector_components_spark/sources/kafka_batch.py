@@ -28,8 +28,8 @@ container, documented not silent.  CRC32C (Castagnoli, reflected
 ``valid = false`` row rather than shifted garbage rows.
 
 Scale shape mirrors the forward/avro/jaeger intakes: one batch per
-(shard) group packed in applyInPandas; decode Arrow-batched in
-mapInPandas — per-body tasks, no shuffle.
+(shard) group packed in applyInPandas; decode per body through
+``sources/decoders.py::decode_bodies`` — no shuffle.
 """
 
 from __future__ import annotations
@@ -40,6 +40,8 @@ import zlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .decoders import decode_bodies
 
 _XERIAL_MAGIC = b"\x82SNAPPY\x00"
 
@@ -309,52 +311,29 @@ def decode_kafka_batches(df: DataFrame, body_col: str = "body") -> DataFrame:
     key/value as strings (utf-8 with replacement; binary consumers
     re-encode), torn batches (CRC/magic/framing) -> one valid=false
     row."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType, LongType, MapType, StringType, StructField, StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("offset", LongType()),
-            StructField("ts_ms", LongType()),
-            StructField("key", StringType()),
-            StructField("value", StringType()),
-            StructField("headers", MapType(StringType(), StringType())),
-            StructField("codec", StringType()),
-            StructField("valid", BooleanType()),
-        ]
-    )
-    cols = [f.name for f in schema.fields]
 
     def _dec(b: bytes | None) -> str | None:
         return None if b is None else b.decode("utf-8", "replace")
 
-    def _decode(batches):
-        for pdf in batches:
-            rows = []
-            for body in pdf[body_col]:
-                if body is None:
-                    continue
-                try:
-                    batch = decode_record_batch(bytes(body))
-                    for r in batch["records"]:
-                        rows.append(
-                            {
-                                "offset": r["offset"],
-                                "ts_ms": r["ts_ms"],
-                                "key": _dec(r["key"]),
-                                "value": _dec(r["value"]),
-                                "headers": {
-                                    k: _dec(v) for k, v in r["headers"]
-                                },
-                                "codec": batch["codec"],
-                                "valid": True,
-                            }
-                        )
-                except (ValueError, TypeError, IndexError, struct.error,
-                        EOFError, OSError, zlib.error, UnicodeDecodeError):
-                    rows.append(dict.fromkeys(cols[:-1]) | {"valid": False})
-            yield pd.DataFrame(rows, columns=cols)
+    def _records(body: bytes):
+        batch = decode_record_batch(body)
+        for r in batch["records"]:
+            yield {
+                "offset": r["offset"],
+                "ts_ms": r["ts_ms"],
+                "key": _dec(r["key"]),
+                "value": _dec(r["value"]),
+                "headers": {k: _dec(v) for k, v in r["headers"]},
+                "codec": batch["codec"],
+                "valid": True,
+            }
 
-    return df.select(body_col).mapInPandas(_decode, schema=schema)
+    return decode_bodies(
+        df,
+        body_col,
+        "offset long, ts_ms long, key string, value string, "
+        "headers map<string, string>, codec string, valid boolean",
+        _records,
+        (ValueError, TypeError, IndexError, struct.error, EOFError, OSError,
+         zlib.error, UnicodeDecodeError),
+    )

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .decoders import decode_bodies
+
 #: from_json schema for ExportLogsServiceRequest (subset: scalar AnyValue)
 OTLP_LOGS_DDL = (
     "resourceLogs ARRAY<STRUCT<"
@@ -733,70 +735,20 @@ def encode_otlp_traces(
 # Arrow-batched like the PRW path.
 # ---------------------------------------------------------------------------
 
-def _encode_protobuf_bodies(df: DataFrame, build_request) -> DataFrame:
-    """Shared encoder transport: one binary request body PER ROW in
-    column ``body`` via ``mapInArrow`` — NOT ``mapInPandas``: a
-    nullable int64 column (e.g. a gauge's absent start_time beside a
-    sum's populated one) coerces to float64 in pandas and silently
-    corrupts nanosecond timestamps above 2^53; Arrow ``to_pylist``
-    keeps int64 + null exact.  ``build_request(row_dict) -> bytes``
-    runs the pure-Python codec; map columns arrive as key/value tuple
-    lists and are dict-ified by the builders."""
-    import pyarrow as pa
-
-    out_schema = pa.schema([pa.field("body", pa.binary())])
-
-    def _enc(batches):
-        for batch in batches:
-            yield pa.RecordBatch.from_pylist(
-                [{"body": build_request(r)} for r in batch.to_pylist()],
-                schema=out_schema,
-            )
-
-    return df.mapInArrow(_enc, schema="body binary")
-
-
-def _decode_protobuf_bodies(
-    df: DataFrame,
-    body_col: str,
-    compression: str | None,
-    schema,
-    decode_request,
-) -> DataFrame:
-    """Shared decoder transport: binary request bodies -> flat rows of
-    ``schema`` via ``decode_request(bytes) -> list[dict]`` (the
-    pure-Python codec), Arrow-batched.  NULL bodies are skipped;
+def _request_decoder(decode_request, compression: str | None):
+    """The per-body codec for ``decode_bodies``: ``decode_request(bytes)
+    -> list[dict]`` (the pure-Python codec), after a gunzip when
+    ``compression='gzip'`` (Content-Encoding: gzip, the OTLP/HTTP
+    standard; functions/gzip_codec.py).  NULL bodies are skipped;
     broken bodies raise inside the codec (protobuf has no lenient
-    parse; count upstream if loss must be tolerated).
-    ``compression='gzip'`` gunzips each body first (Content-Encoding:
-    gzip, the OTLP/HTTP standard; functions/gzip_codec.py)."""
-    import pandas as pd
-
+    parse; count upstream if loss must be tolerated)."""
+    if compression is None:
+        return decode_request
+    if compression != "gzip":
+        raise ValueError(f"unsupported compression: {compression!r}")
     from ..functions.gzip_codec import gzip_decompress
 
-    if compression not in (None, "gzip"):
-        raise ValueError(f"unsupported compression: {compression!r}")
-
-    def _dec(batches):
-        cols = [f.name for f in schema.fields]
-        for pdf in batches:
-            rows = []
-            for body in pdf[body_col]:
-                if body is None:
-                    continue
-                raw = bytes(body)
-                if compression == "gzip":
-                    raw = gzip_decompress(raw)
-                for rec in decode_request(raw):
-                    rows.append({c: rec.get(c) for c in cols})
-            # dtype=object: pandas would infer float64 for an int64
-            # column containing a None (e.g. gauge rows without
-            # start_time beside sum rows with one) and corrupt
-            # nanosecond timestamps >2^53; object columns hand exact
-            # Python ints straight to the Arrow converter
-            yield pd.DataFrame(rows, columns=cols, dtype=object)
-
-    return df.select(body_col).mapInPandas(_dec, schema=schema)
+    return lambda body: decode_request(gzip_decompress(body))
 
 
 def _row_map(v) -> dict:
@@ -806,17 +758,23 @@ def _row_map(v) -> dict:
 
 
 def _encode_protobuf_bodies_grouped(
-    df: DataFrame, build_record, encode_request
+    df: DataFrame, build_record, encode_request, batched: bool
 ) -> DataFrame:
-    """Exporter-side batching: one binary request per (service_name,
+    """Shared encoder transport: binary request bodies in column
+    ``body``.  ``batched=False`` emits one request PER ROW (a group of
+    one); ``batched=True`` emits one request per (service_name,
     scope_name) RUN within each Arrow batch — all records sharing the
     resource/scope land in a single Export*ServiceRequest, amortizing
     the envelope.  No shuffle: a real exporter batches whatever its
     partition holds (the reference's queue/batcher does the same
     per-consumer, not globally), and the decode side re-flattens to
     identical rows regardless of how records were grouped, so results
-    are grouping-invariant.  Same mapInArrow int64-exactness rationale
-    as ``_encode_protobuf_bodies``."""
+    are grouping-invariant.  ``mapInArrow``, NOT ``mapInPandas``: a
+    nullable int64 column (e.g. a gauge's absent start_time beside a
+    sum's populated one) coerces to float64 in pandas and silently
+    corrupts nanosecond timestamps above 2^53; Arrow ``to_pylist``
+    keeps int64 + null exact.  Map columns arrive as key/value tuple
+    lists and are dict-ified by the record builders."""
     import pyarrow as pa
 
     out_schema = pa.schema([pa.field("body", pa.binary())])
@@ -824,17 +782,19 @@ def _encode_protobuf_bodies_grouped(
     def _enc(batches):
         for batch in batches:
             groups: dict = {}
-            for r in batch.to_pylist():
+            for i, r in enumerate(batch.to_pylist()):
                 key = (r.get("service_name"), r.get("scope_name"))
-                groups.setdefault(key, []).append(build_record(r))
+                groups.setdefault(key if batched else (i, *key), []).append(
+                    build_record(r)
+                )
             yield pa.RecordBatch.from_pylist(
                 [
                     {
                         "body": encode_request(
-                            {"service_name": svc}, scope, recs
+                            {"service_name": key[-2]}, key[-1], recs
                         )
                     }
-                    for (svc, scope), recs in groups.items()
+                    for key, recs in groups.items()
                 ],
                 schema=out_schema,
             )
@@ -870,19 +830,9 @@ def encode_otlp_logs_protobuf(
     transport pattern as the prometheusremotewrite path."""
     from ..functions.protowire import encode_otlp_logs_request
 
-    if batched:
-        return _encode_protobuf_bodies_grouped(
-            df, _log_record, encode_otlp_logs_request
-        )
-
-    def _build(r: dict) -> bytes:
-        return encode_otlp_logs_request(
-            {"service_name": r.get("service_name")},
-            r.get("scope_name"),
-            [_log_record(r)],
-        )
-
-    return _encode_protobuf_bodies(df, _build)
+    return _encode_protobuf_bodies_grouped(
+        df, _log_record, encode_otlp_logs_request, batched
+    )
 
 
 def decode_otlp_logs_protobuf(
@@ -912,9 +862,8 @@ def decode_otlp_logs_protobuf(
             StructField("attributes", MapType(StringType(), StringType())),
         ]
     )
-    return _decode_protobuf_bodies(
-        df, body_col, compression, schema, decode_otlp_logs_request
-    )
+    decode = _request_decoder(decode_otlp_logs_request, compression)
+    return decode_bodies(df, body_col, schema, decode)
 
 
 def _span_record(r: dict) -> dict:
@@ -952,19 +901,9 @@ def encode_otlp_traces_protobuf(
     scalar ``service_name`` and ``scope_name`` columns."""
     from ..functions.protowire import encode_otlp_traces_request
 
-    if batched:
-        return _encode_protobuf_bodies_grouped(
-            df, _span_record, encode_otlp_traces_request
-        )
-
-    def _build(r: dict) -> bytes:
-        return encode_otlp_traces_request(
-            {"service_name": r.get("service_name")},
-            r.get("scope_name"),
-            [_span_record(r)],
-        )
-
-    return _encode_protobuf_bodies(df, _build)
+    return _encode_protobuf_bodies_grouped(
+        df, _span_record, encode_otlp_traces_request, batched
+    )
 
 
 def decode_otlp_traces_protobuf(
@@ -1028,9 +967,8 @@ def decode_otlp_traces_protobuf(
             ),
         ]
     )
-    return _decode_protobuf_bodies(
-        df, body_col, compression, schema, decode_otlp_traces_request
-    )
+    decode = _request_decoder(decode_otlp_traces_request, compression)
+    return decode_bodies(df, body_col, schema, decode)
 
 
 _METRIC_POINT_FIELDS = (
@@ -1061,19 +999,9 @@ def encode_otlp_metrics_protobuf(
     exact (proto3 presence = column null)."""
     from ..functions.protowire import encode_otlp_metrics_request
 
-    if batched:
-        return _encode_protobuf_bodies_grouped(
-            df, _metric_point, encode_otlp_metrics_request
-        )
-
-    def _build(r: dict) -> bytes:
-        return encode_otlp_metrics_request(
-            {"service_name": r.get("service_name")},
-            r.get("scope_name"),
-            [_metric_point(r)],
-        )
-
-    return _encode_protobuf_bodies(df, _build)
+    return _encode_protobuf_bodies_grouped(
+        df, _metric_point, encode_otlp_metrics_request, batched
+    )
 
 
 def decode_otlp_metrics_protobuf(
@@ -1134,6 +1062,5 @@ def decode_otlp_metrics_protobuf(
             ),
         ]
     )
-    return _decode_protobuf_bodies(
-        df, body_col, compression, schema, decode_otlp_metrics_request
-    )
+    decode = _request_decoder(decode_otlp_metrics_request, compression)
+    return decode_bodies(df, body_col, schema, decode)

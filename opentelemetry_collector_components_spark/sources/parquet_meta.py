@@ -25,9 +25,10 @@ fully independent implementation — so the gate cross-validates two
 readers of the same public format byte-for-byte.
 
 Scale shape: ``spark.read.format("binaryFile")`` distributes files to
-tasks; footer parse is mapInPandas over file bytes (the footer is the
-LAST kilobytes — a production variant would range-read; the fixture
-files are small, documented).  One row per column chunk.
+tasks; footer parse runs per file through
+``sources/decoders.py::decode_bodies`` (the footer is the LAST
+kilobytes — a production variant would range-read; the fixture files
+are small, documented).  One row per column chunk.
 """
 
 from __future__ import annotations
@@ -37,6 +38,7 @@ import struct
 from pyspark.sql import DataFrame
 
 from ..functions.thrift_compact import read_struct
+from .decoders import decode_bodies
 
 _CODECS = {
     0: "UNCOMPRESSED", 1: "SNAPPY", 2: "GZIP", 3: "LZO",
@@ -101,7 +103,6 @@ def rowgroup_zone_maps(spark, paths, column: str) -> "DataFrame":
     <column>_min, <column>_max)``."""
     import os
 
-    import pandas as pd
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType,
     )
@@ -117,40 +118,32 @@ def rowgroup_zone_maps(spark, paths, column: str) -> "DataFrame":
     )
     files = spark.read.format("binaryFile").load(paths)
 
-    def _parse(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                name = os.path.basename(str(path))
-                meta = parse_footer(bytes(content))
-                for c in meta["columns"]:
-                    if c["path_in_schema"] != column:
-                        continue
-                    mn = stat_int64(c["min_value"])
-                    mx = stat_int64(c["max_value"])
-                    if mn is None or mx is None:
-                        # ABSENT statistics are not "all NULL": prune_scan
-                        # treats a NULL envelope as skippable, which here
-                        # would silently drop live rows.  Only a group the
-                        # footer PROVES all-NULL keeps the NULL envelope;
-                        # anything else gets the conservative full range
-                        # (always overlaps -> must_read).
-                        if c["null_count"] == c["rg_num_rows"]:
-                            mn = mx = None
-                        else:
-                            mn, mx = -(1 << 63), (1 << 63) - 1
-                    rows.append(
-                        {
-                            "file_name": name,
-                            "file_id": c["row_group_id"],
-                            "n_rows": c["rg_num_rows"],
-                            f"{column}_min": mn,
-                            f"{column}_max": mx,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def _zones(path: str, content: bytes):
+        name = os.path.basename(path)
+        for c in parse_footer(content)["columns"]:
+            if c["path_in_schema"] != column:
+                continue
+            mn = stat_int64(c["min_value"])
+            mx = stat_int64(c["max_value"])
+            if mn is None or mx is None:
+                # ABSENT statistics are not "all NULL": prune_scan treats
+                # a NULL envelope as skippable, which here would silently
+                # drop live rows.  Only a group the footer PROVES all-NULL
+                # keeps the NULL envelope; anything else gets the
+                # conservative full range (always overlaps -> must_read).
+                if c["null_count"] == c["rg_num_rows"]:
+                    mn = mx = None
+                else:
+                    mn, mx = -(1 << 63), (1 << 63) - 1
+            yield {
+                "file_name": name,
+                "file_id": c["row_group_id"],
+                "n_rows": c["rg_num_rows"],
+                f"{column}_min": mn,
+                f"{column}_max": mx,
+            }
 
-    return files.select("path", "content").mapInPandas(_parse, schema=schema)
+    return decode_bodies(files, ["path", "content"], schema, _zones)
 
 
 def parquet_footer_columns(
@@ -162,42 +155,27 @@ def parquet_footer_columns(
     total_compressed_size, valid)``."""
     import os
 
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType, LongType, StringType, StructField, StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("file_name", StringType()),
-            StructField("row_group_id", LongType()),
-            StructField("rg_num_rows", LongType()),
-            StructField("path_in_schema", StringType()),
-            StructField("codec", StringType()),
-            StructField("num_values", LongType()),
-            StructField("total_uncompressed_size", LongType()),
-            StructField("total_compressed_size", LongType()),
-            StructField("valid", BooleanType()),
-        ]
-    )
-    cols = [f.name for f in schema.fields]
     files = spark.read.format("binaryFile").load(paths)
 
-    def _parse(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                name = os.path.basename(str(path))
-                try:
-                    meta = parse_footer(bytes(content))
-                    for c in meta["columns"]:
-                        rows.append({"file_name": name, "valid": True, **c})
-                except (ValueError, TypeError, KeyError, IndexError,
-                        struct.error, UnicodeDecodeError):
-                    rows.append(
-                        dict.fromkeys(cols, None)
-                        | {"file_name": name, "valid": False}
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def _chunks(path: str, content: bytes) -> list[dict]:
+        # the invalid row keeps the file name, so the codec builds it
+        name = os.path.basename(path)
+        try:
+            meta = parse_footer(content)
+            return [
+                {"file_name": name, "valid": True, **c}
+                for c in meta["columns"]
+            ]
+        except (ValueError, TypeError, KeyError, IndexError, struct.error,
+                UnicodeDecodeError):
+            return [{"file_name": name, "valid": False}]
 
-    return files.select("path", "content").mapInPandas(_parse, schema=schema)
+    return decode_bodies(
+        files,
+        ["path", "content"],
+        "file_name string, row_group_id long, rg_num_rows long, "
+        "path_in_schema string, codec string, num_values long, "
+        "total_uncompressed_size long, total_compressed_size long, "
+        "valid boolean",
+        _chunks,
+    )

@@ -32,14 +32,6 @@ def _header_block(rec: Column) -> Column:
     return F.split_part(rec, F.lit(_BLANK), F.lit(1))
 
 
-def _after_headers(rec: Column) -> Column:
-    # everything past the FIRST blank line; split_part would also cut the
-    # payload's own blank lines, so slice by the header block's length
-    return F.substring(
-        rec, F.length(_header_block(rec)) + len(_BLANK) + 1, F.lit(2147483647)
-    )
-
-
 def _header(block: Column, name: str) -> Column:
     got = F.regexp_extract(
         block, rf"(?im)^{name}:[ \t]*(.*?)[ \t\r]*$", 1

@@ -1,7 +1,24 @@
-"""Decoder sources: beats json/text/csv codecs + NDJSON intake dispatch."""
+"""Decoder sources: beats json/text/csv codecs, NDJSON intake dispatch,
+and the shared binary-body transport (`decode_bodies`) behind every wire
+decoder."""
 
+import pytest
 from pyspark.sql import functions as F
 
+from opentelemetry_collector_components_spark.sources import (
+    arrow_stream,
+    avro_ocf,
+    cbor_records,
+    forward,
+    gelf,
+    iceberg_meta,
+    jaeger,
+    journald,
+    kafka_batch,
+    otlp,
+    parquet_meta,
+)
+from opentelemetry_collector_components_spark.sources import decoders as prw
 from opentelemetry_collector_components_spark.sources.decoders import (
     decode_csv,
     decode_json,
@@ -157,7 +174,7 @@ def test_prw_body_decode_drops_unnamed(spark):
     assert dps.count() == 14 * 2 * 2  # unnamed series dropped, 2 samples each
     assert dps.filter("metric_name = ''").count() == 0
     plan = dps._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan  # mapInPandas is Arrow-side
+    assert "BatchEvalPython" not in plan  # the decode is Arrow-side
 
 
 # ---------------------------------------------------------------------------
@@ -377,3 +394,320 @@ def test_snappy_framing_empty_compressed_chunk_is_valueerror():
     good = frame_compress(b"x")
     with _pt.raises(ValueError, match="empty snappy frame"):
         frame_decompress(good + b"\x00\x04\x00\x00\x00\x00\x00\x00")
+
+
+# ---------------------------------------------------------------------------
+# decode_bodies: the one binary-body transport behind every wire decoder
+# ---------------------------------------------------------------------------
+_CONFLUENT_SCHEMA = {
+    "type": "record", "name": "R",
+    "fields": [{"name": "a", "type": "long"}, {"name": "s", "type": "string"}],
+}
+
+
+def _otlp_bodies(spark, events):
+    from opentelemetry_collector_components_spark.functions.protowire import (
+        encode_otlp_logs_request,
+    )
+
+    bodies = [
+        encode_otlp_logs_request(
+            {"service_name": f"s{i % 2}"}, "lib",
+            [{"time_unix_nano": i, "severity_number": 9, "body": f"m{i}",
+              "attributes": {"k": str(i)}}] * (i + 1),
+        )
+        for i in range(3)
+    ]
+    return spark.createDataFrame([(b,) for b in bodies], "body binary")
+
+
+def _confluent_bodies(spark, events):
+    from opentelemetry_collector_components_spark.functions.avro_codec import (
+        encode_value,
+    )
+
+    bodies = []
+    for i in range(3):
+        out = bytearray(b"\x00" + (5).to_bytes(4, "big"))
+        encode_value(out, _CONFLUENT_SCHEMA, {"a": i, "s": f"v{i}"})
+        bodies.append(bytes(out))
+    return spark.createDataFrame([(b,) for b in bodies], "body binary")
+
+
+#: every body decoder: (fixture bodies from (spark, events), decode)
+BODY_DECODERS = {
+    "otlp": (_otlp_bodies, otlp.decode_otlp_logs_protobuf),
+    "jaeger": (
+        lambda s, ev: jaeger.generate_jaeger_batches(ev),
+        jaeger.decode_jaeger_batches,
+    ),
+    "forward": (
+        lambda s, ev: forward.generate_forward_messages(ev),
+        forward.decode_forward,
+    ),
+    "journald": (
+        lambda s, ev: journald.generate_journal_export(ev),
+        journald.decode_journal_export,
+    ),
+    "cbor_records": (
+        lambda s, ev: cbor_records.generate_cbor_bodies(ev),
+        cbor_records.decode_cbor_bodies,
+    ),
+    "avro_ocf": (
+        lambda s, ev: avro_ocf.generate_avro_containers(ev),
+        avro_ocf.decode_avro_containers,
+    ),
+    "avro_resolved": (
+        lambda s, ev: avro_ocf.generate_avro_containers(ev),
+        avro_ocf.decode_avro_containers_resolved,
+    ),
+    "confluent_wire": (
+        _confluent_bodies,
+        lambda df: avro_ocf.decode_confluent_frames(
+            df, {5: _CONFLUENT_SCHEMA}
+        ),
+    ),
+    "kafka_batch": (
+        lambda s, ev: kafka_batch.generate_kafka_batches(ev),
+        kafka_batch.decode_kafka_batches,
+    ),
+    "arrow_stream": (
+        lambda s, ev: arrow_stream.generate_arrow_streams(ev),
+        arrow_stream.decode_arrow_streams,
+    ),
+    "prw": (
+        lambda s, ev: prw.generate_prw_bodies(s, 6),
+        prw.decode_prw_write_request,
+    ),
+    "prw_v2": (
+        lambda s, ev: prw.generate_prw_v2_bodies(s, 6),
+        prw.decode_prw_write_request_v2,
+    ),
+    "gelf": (
+        lambda s, ev: gelf.generate_gelf_bodies(ev),
+        gelf.decode_gelf_datagrams,
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def fixture_bodies(spark, sf_dir):
+    """name -> the decoder's fixture bodies, collected once as Python
+    bytes, so test frames are plain local scans."""
+    events = spark.read.parquet(f"{sf_dir}/events.parquet").where(
+        "event_id < 60"
+    )
+    cache: dict = {}
+
+    def get(name):
+        if name not in cache:
+            make = BODY_DECODERS[name][0]
+            cache[name] = [r.body for r in make(spark, events).collect()]
+        return cache[name]
+
+    return get
+
+
+def _bodies_frame(spark, bodies):
+    return spark.createDataFrame(
+        [(b,) for b in bodies], "body binary"
+    ).coalesce(1)
+
+
+def _iceberg_plan(spark, empty, events):
+    blobs = spark.createDataFrame(
+        [("ml.avro", b"")], "path string, content binary"
+    )
+    meta = '{"current-snapshot-id": 1, "snapshots": [' \
+        '{"snapshot-id": 1, "manifest-list": "ml.avro"}]}'
+    return iceberg_meta.resolve_iceberg_snapshot(meta, blobs)
+
+
+#: every migrated decode site -> (spark, empty body frame, a parquet
+#: path) -> its output
+PLAN_CASES = {
+    **{name: (lambda s, e, p, dec=dec: dec(e))
+       for name, (_, dec) in BODY_DECODERS.items()},
+    "otlp_traces": lambda s, e, p: otlp.decode_otlp_traces_protobuf(e),
+    "otlp_metrics": lambda s, e, p: otlp.decode_otlp_metrics_protobuf(e),
+    "parquet_footer_columns":
+        lambda s, e, p: parquet_meta.parquet_footer_columns(s, [p]),
+    "parquet_zone_maps":
+        lambda s, e, p: parquet_meta.rowgroup_zone_maps(s, p, "event_id"),
+    "iceberg": _iceberg_plan,
+}
+
+
+@pytest.mark.parametrize("name", sorted(PLAN_CASES))
+def test_decoder_plan_is_map_in_arrow(spark, sf_dir, name):
+    """Every binary-body decoder crosses into Spark through decode_bodies:
+    MapInArrow, never a pandas frame (MapInPandas) or per-row Python.
+    GELF's chunk reassembly is the one grouped pass left on mapInPandas."""
+    out = PLAN_CASES[name](
+        spark, _bodies_frame(spark, []), f"{sf_dir}/events.parquet"
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan
+    assert "BatchEvalPython" not in plan
+    assert plan.count("MapInPandas") == (1 if name == "gelf" else 0)
+
+
+@pytest.mark.parametrize("name", sorted(BODY_DECODERS))
+def test_null_body_yields_no_rows(spark, fixture_bodies, name):
+    """One NULL-body rule for every decoder: a NULL body is skipped —
+    no invalid row, no task failure, its neighbours decode as before."""
+    decode = BODY_DECODERS[name][1]
+    bodies = fixture_bodies(name)
+    assert bodies
+    plain = decode(_bodies_frame(spark, bodies)).collect()
+    mixed = decode(
+        _bodies_frame(spark, bodies[:1] + [None] + bodies[1:] + [None])
+    ).collect()
+    assert plain
+    assert sorted(map(repr, mixed)) == sorted(map(repr, plain))
+
+
+BIG = (1 << 60) + 1  # above 2^53: a float64 round trip reads it as 2^60
+
+
+def _avro_big_bodies():
+    from opentelemetry_collector_components_spark.functions.avro_codec import (
+        write_container,
+    )
+
+    recs = [
+        {"eid": BIG, "uid": BIG + 2, "etype": "click", "vm": 1,
+         "knum": BIG + 4, "tags": {}},
+        {"eid": 7, "uid": 1, "etype": "view", "vm": 2, "knum": None,
+         "tags": {"u": "x"}},
+    ]
+    blob = write_container(avro_ocf.EVENT_SCHEMA, recs, sync=b"s" * 16)
+    return [blob, b"Obj\x01 torn container"]
+
+
+def _cbor_big_bodies():
+    from opentelemetry_collector_components_spark.functions.cbor_codec import (
+        Tag,
+        encode,
+    )
+
+    big = encode({"eid": BIG, "type": "click", "v": 1.5,
+                  "ts": Tag(1, BIG + 2), "ks": [BIG, 3], "m": {"u": BIG + 6}})
+    small = encode({"eid": None, "type": "view", "v": None,
+                    "ts": Tag(1, 5), "ks": [1, 2], "m": {"u": None}})
+    return [big + small, big[:-3]]
+
+
+def _arrow_big_bodies():
+    import io
+
+    import pyarrow as pa
+
+    t = pa.table(
+        {
+            "eid": pa.array([BIG, 3], type=pa.int64()),
+            "etype": pa.array(["click", "view"]),
+            "vm": pa.array([BIG + 4, None], type=pa.int64()),
+            "val": pa.array([1.0, 2.0], type=pa.float64()),
+            "ts_us": pa.array([BIG + 2, 9], type=pa.timestamp("us")),
+        }
+    )
+    sink = io.BytesIO()
+    with pa.ipc.new_stream(sink, t.schema) as w:
+        w.write_table(t)
+    blob = sink.getvalue()
+    return [blob, blob[: len(blob) // 2]]
+
+
+def _kafka_big_bodies():
+    blob = kafka_batch.encode_record_batch(
+        base_offset=BIG,
+        base_timestamp_ms=1_700_000_000_000,
+        records=[
+            {"ts_ms": 1_700_000_000_000 + i, "key": b"k", "value": b"v",
+             "headers": []}
+            for i in range(2)
+        ],
+    )
+    torn = bytearray(blob)
+    torn[-1] ^= 0xFF  # CRC mismatch
+    return [blob, bytes(torn)]
+
+
+_INT64_BODY_CASES = {
+    "avro_ocf": (
+        _avro_big_bodies, avro_ocf.decode_avro_containers,
+        {("eid", "knum"): {(BIG, BIG + 4), (7, None)}},
+    ),
+    "avro_resolved": (
+        _avro_big_bodies, avro_ocf.decode_avro_containers_resolved,
+        {("eid", "knum"): {(BIG, BIG + 4), (7, None)}},
+    ),
+    "cbor_records": (
+        _cbor_big_bodies, cbor_records.decode_cbor_bodies,
+        {("eid", "epoch", "k_sum", "uid"): {
+            (BIG, BIG + 2, BIG + 3, BIG + 6), (None, 5, 3, None)}},
+    ),
+    "arrow_stream": (
+        _arrow_big_bodies, arrow_stream.decode_arrow_streams,
+        {("eid", "vm", "ts_us"): {(BIG, BIG + 4, BIG + 2), (3, None, 9)}},
+    ),
+    "kafka_batch": (
+        _kafka_big_bodies, kafka_batch.decode_kafka_batches,
+        {("offset",): {(BIG,), (BIG + 1,)}},
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_INT64_BODY_CASES))
+def test_int64_exact_beside_nulls_and_invalid_rows(spark, name):
+    """A LongType value above 2^53 shares one Arrow batch with a NULL in
+    the same column (a nullable field, or the all-NULL invalid row of an
+    undecodable body): it must come back exact, never via float64."""
+    make, decode, want = _INT64_BODY_CASES[name]
+    rows = decode(_bodies_frame(spark, make())).collect()
+    assert sum(1 for r in rows if not r.valid) == 1
+    valid = [r for r in rows if r.valid]
+    for cols, expected in want.items():
+        assert {tuple(r[c] for c in cols) for r in valid} == expected
+
+
+def test_int64_exact_parquet_zone_maps(spark, tmp_path):
+    """Row-group zone maps: an exact int64 min/max above 2^53 beside an
+    all-NULL group's NULL envelope, and the no-statistics full-range
+    sentinel (2^63 - 1) beside that NULL, all in one Arrow batch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    vals = pa.array([BIG + 4, BIG + 8, None, None], type=pa.int64())
+    pq.write_table(pa.table({"v": vals}), f"{tmp_path}/a.parquet",
+                   row_group_size=2)
+    pq.write_table(pa.table({"v": vals}), f"{tmp_path}/b.parquet",
+                   row_group_size=2, write_statistics=False)
+    # pack both small files into one scan partition, hence one batch
+    confs = {
+        "spark.sql.files.maxPartitionBytes": str(1 << 30),
+        "spark.sql.files.openCostInBytes": "0",
+        "spark.sql.files.minPartitionNum": "1",
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        zm = parquet_meta.rowgroup_zone_maps(spark, str(tmp_path), "v")
+        assert zm.rdd.getNumPartitions() == 1
+        got = {(r.file_name, r.file_id): (r.v_min, r.v_max)
+               for r in zm.collect()}
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    full = (-(1 << 63), (1 << 63) - 1)
+    assert got == {
+        ("a.parquet", 0): (BIG + 4, BIG + 8),
+        ("a.parquet", 1): (None, None),
+        ("b.parquet", 0): full,
+        ("b.parquet", 1): full,
+    }

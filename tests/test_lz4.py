@@ -85,8 +85,12 @@ def test_spark_pack_unpack_roundtrip(spark):
         lz4_unpack_bodies,
     )
 
+    # a nullable int64 above 2^53 beside the body must pass through exact
     df = spark.range(200).select(
         F.col("id"),
+        F.when(F.col("id") % 50 == 3, F.lit(None))
+        .otherwise(F.col("id") + (1 << 60))
+        .alias("big"),
         F.when(F.col("id") % 50 == 7, F.lit(None).cast("binary"))
         .otherwise(
             F.encode(
@@ -103,10 +107,12 @@ def test_spark_pack_unpack_roundtrip(spark):
     )
     packed = lz4_pack_bodies(df, "body")
     back = lz4_unpack_bodies(packed, "body")
-    got = {r["id"]: r["body"] for r in back.collect()}
-    want = {r["id"]: r["body"] for r in df.collect()}
-    assert {k: bytes(v) if v is not None else None for k, v in got.items()} == {
-        k: bytes(v) if v is not None else None for k, v in want.items()
+    got = {r["id"]: (r["big"], r["body"]) for r in back.collect()}
+    want = {r["id"]: (r["big"], r["body"]) for r in df.collect()}
+    assert {k: (b, bytes(v) if v is not None else None)
+            for k, (b, v) in got.items()} == {
+        k: (b, bytes(v) if v is not None else None)
+        for k, (b, v) in want.items()
     }
     plan = packed._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
