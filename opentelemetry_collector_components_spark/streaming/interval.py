@@ -34,7 +34,7 @@ def _fold_partials(partials: DataFrame, keys: list[str], intervals: Sequence[str
     from ..operators.aggregate import fold_intervals
 
     aggs = [F.sum("docs").alias("docs"), F.sum("value_sum").alias("value_sum")]
-    return fold_intervals(partials, keys, intervals, aggs).drop("window_end")
+    return fold_intervals(partials, keys, "window_start", intervals, aggs).drop("window_end")
 
 
 def streaming_interval_agg(
@@ -83,11 +83,12 @@ def streaming_interval_rollup(
 ):
     """Multi-interval streaming rollup: ONE stateful 1m aggregate; every
     interval (1m/10m/60m) is derived INSIDE ``foreachBatch`` from the 1m
-    partials by ``operators.aggregate.fold_intervals``, the same fold
-    ``interval_rollup_union`` runs — the reference's single-copy-per-
-    interval LSM design (processor/lsmintervalprocessor/processor.go:
-    399-413) improved on: the reference re-buffers every datapoint once PER
-    interval, here only the finest interval ever sees raw rows.
+    partials by ``operators.aggregate.fold_intervals``, the fold
+    ``interval_rollup_union`` runs over raw rows, here folding the 1m
+    state on ``window_start``.  The reference re-buffers every datapoint
+    once PER interval (processor/lsmintervalprocessor/processor.go:
+    399-413); the state store here holds only the finest interval, and
+    the coarser ones are copies of its partials, never of raw rows.
 
     Scale shape: the state store holds |keys| x minutes rows (tiny); each
     micro-batch emits the complete current 1m table, the rollup is one
@@ -265,12 +266,12 @@ def read_interval_rollup(
     keys: list[str],
     intervals: tuple[str, ...] = ("1m", "10m", "60m"),
 ) -> DataFrame:
-    """Read-time rollup over the 1m-partials table: every interval is the
-    one associative fold the batch path uses (``fold_intervals``; counts
-    and sums of the finest interval re-sum exactly), so storing only 1m
-    partials loses nothing.  The partials table holds one row per key
-    combination and minute, so the fold's cost is bounded by that table,
-    not by how much raw stream fed it."""
+    """Read-time rollup over the 1m-partials table: every interval is
+    ``fold_intervals`` (the fold the batch path runs over raw rows) over
+    the stored partials; counts and sums of the finest interval re-sum
+    exactly, so storing only 1m partials loses nothing.  The partials
+    table holds one row per key combination and minute, so the fold's cost
+    is bounded by that table, not by how much raw stream fed it."""
     # the finest requested interval is folded too (not just labeled): a
     # no-op re-group when it equals the stored 1m granularity, and the
     # correct aggregation when a caller requests only coarser intervals

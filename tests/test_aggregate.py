@@ -1,9 +1,11 @@
-"""M4a: interval rollup — 1m partials roll up exactly to 10m/60m."""
+"""M4a: interval rollup — every interval equals the raw input aggregated
+directly at that interval."""
 
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_components_spark.operators.aggregate import (
-    aggregate_base_interval,
+    _IVL_SECONDS,
+    _metric_aggs,
     decorate_interval,
     interval_rollup,
     interval_rollup_union,
@@ -25,16 +27,38 @@ def _routed(spark, n=20000):
     return with_data_stream_route(enriched)
 
 
+def _direct(df, keys, interval="1m", distinct_mode=None, time_col="warc_ts"):
+    """The direct-aggregate reference: ``df`` grouped once at one interval."""
+    win = trunc_to_interval(F.col(time_col), interval)
+    out = df.groupBy(win.alias("window_start"), *keys).agg(*_metric_aggs(distinct_mode))
+    return out.withColumn(
+        "window_end", F.timestamp_seconds(F.unix_timestamp("window_start") + _IVL_SECONDS[interval])
+    )
+
+
+def _rows(spark, n, span_s, svc):
+    """``n`` synthetic rows, one a second from 2025-12-31 23:55 UTC
+    (wrapping every ``span_s`` seconds), over sinks "0"/"1" and the ``svc``
+    column expression."""
+    return spark.range(n).select(
+        F.timestamp_seconds(F.lit(1_767_225_300) + F.col("id") % span_s).alias("warc_ts"),
+        (F.col("id") % 2).cast("string").alias("sink"),
+        svc.alias("svc"),
+        F.lit(1).cast("long").alias("dur_us"),
+        F.lit(1).cast("long").alias("success_count"),
+        F.lit(0).cast("long").alias("failure_count"),
+    )
+
+
 def _as_sorted_rows(df, cols):
     return [tuple(r) for r in df.select(*cols).orderBy(*cols).collect()]
 
 
 def test_rollup_equals_direct(spark):
-    """Rolling 1m partials up to 10m == aggregating raw data at 10m
-    (associativity — the pebble merge-operator property)."""
+    """The rollup's 10m frame == aggregating raw data at 10m."""
     routed = _routed(spark).cache()
     out = interval_rollup(routed, keys=["sink"], distinct_mode=None)
-    direct_10m = aggregate_base_interval(routed, keys=["sink"], interval="10m")
+    direct_10m = _direct(routed, keys=["sink"], interval="10m")
 
     cols = ["window_start", "sink", "docs", "dur_us_sum", "success_count", "failure_count", "dur_us_min", "dur_us_max"]
     assert _as_sorted_rows(out["10m"], cols) == _as_sorted_rows(direct_10m, cols)
@@ -46,8 +70,9 @@ def test_rollup_union_matches_rollup_scans_once_caches_nothing(spark):
     interval, and interval_rollup's frames are its per-interval slices —
     on a key column with NULL values, for intervals passed unsorted and for
     a single interval.  The executed plan scans the input once, has no
-    Union and exactly two shuffle Exchanges (the finest-interval base and
-    the one interval fold), and the call leaves no persisted RDD."""
+    Union and exactly one shuffle Exchange (the one interval fold over the
+    copied input rows), a noop write of the union runs one shuffle-map job
+    and one result job, and the call leaves no persisted RDD."""
     n = 2000
     keys = ["sink", "geo"]
     # a NULL key value groups like any other value
@@ -71,7 +96,7 @@ def test_rollup_union_matches_rollup_scans_once_caches_nothing(spark):
                 (tuple(r[c] for c in cols) for r in rows if r["metricset_interval"] == ivl),
                 key=repr,
             )
-            direct = decorate_interval(aggregate_base_interval(routed, keys, interval=ivl), ivl)
+            direct = decorate_interval(_direct(routed, keys, interval=ivl), ivl)
             assert got == sorted(map(tuple, direct.select(*cols).collect()), key=repr), ivl
             assert got == sorted(map(tuple, sliced[ivl].collect()), key=repr), ivl
         assert any(r["geo"] is None for r in rows)
@@ -82,8 +107,20 @@ def test_rollup_union_matches_rollup_scans_once_caches_nothing(spark):
         # the dimension's broadcast subtree (a union of hot and cold
         # domains) prints after the rollup's own operators
         assert "Union" not in final.split("BroadcastQueryStage")[0]
-        assert final.count("Exchange hashpartitioning") == 2
+        assert final.count("Exchange hashpartitioning") == 1
         assert "ReusedExchange" not in final
+
+    # jobs, on an input with no broadcast (whose own jobs would count too)
+    sc = spark.sparkContext
+    group = "test-rollup-union-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        interval_rollup_union(_rows(spark, n, 7200, F.lit("a")), keys=["sink"]).write.format(
+            "noop"
+        ).mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
 
 
 def test_hll_rollup_matches_per_interval_fold(spark):
@@ -107,7 +144,7 @@ def test_hll_rollup_matches_per_interval_fold(spark):
         (r["metricset_interval"], r["window_start"], r["sink"]): r["svc_distinct"]
         for r in out.collect()
     }
-    base = aggregate_base_interval(rows, keys, distinct_mode="hll")
+    base = _direct(rows, keys, distinct_mode="hll")
     want = {
         ("1m", r["window_start"], r["sink"]): r["est"]
         for r in base.select("window_start", *keys, F.hll_sketch_estimate("_svc_hll").alias("est")).collect()
@@ -121,6 +158,25 @@ def test_hll_rollup_matches_per_interval_fold(spark):
         for r in per_ivl.collect():
             want[(ivl, r["w"], r["sink"])] = r["est"]
     assert got == want
+
+
+def test_exact_distinct_is_exact_at_every_interval(spark):
+    """distinct_mode='exact' counts distinct services from raw rows at
+    every interval: each minute sees 3 of 5 services, a triple that
+    rotates by one each minute, so every 10m and 60m window (each spans at
+    least 5 of the 20 minutes) counts 5, more than any of its minutes."""
+    keys = ["sink"]
+    svc = ((F.col("id") / 60).cast("long") + F.col("id") % 3) % 5
+    rows = _rows(spark, 2400, 1200, F.concat(F.lit("svc-"), svc.cast("string")))
+    out = interval_rollup_union(rows, keys=keys, distinct_mode="exact")
+    cols = ["window_start", *keys, "docs", "svc_distinct", "metricset_interval"]
+    got = _as_sorted_rows(out, cols)
+    want = []
+    for ivl in ("1m", "10m", "60m"):
+        want += _as_sorted_rows(decorate_interval(_direct(rows, keys, ivl, "exact"), ivl), cols)
+    assert got == sorted(want)
+    by_ivl = {ivl: {r[3] for r in got if r[4] == ivl} for ivl in ("1m", "10m", "60m")}
+    assert by_ivl == {"1m": {3}, "10m": {5}, "60m": {5}}
 
 
 def test_totals_conserved(spark):
